@@ -1092,7 +1092,11 @@ class _BitReader:
                 raise UnsupportedMediaError("JPEG scan data exhausted")
         n -= 1
         self.nbits = n
-        return (self.acc >> n) & 1
+        acc = self.acc
+        # drop the consumed bit: an unmasked accumulator grows with every
+        # bit()-only run and each refill then shifts an ever-larger int
+        self.acc = acc & ((1 << n) - 1)
+        return (acc >> n) & 1
 
     def bits(self, n: int) -> int:
         while self.nbits < n:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import portable as P
+from .banding import band_self_join, stack_bands
 
 
 def _spread_small_scan(docs: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -435,6 +436,26 @@ def _band_key_cols(r: int, n_bands: int):
     ]
 
 
+def _band_stack(
+    sigs: DataFrame, r: int, n_bands: int, out_id: str | None = None
+) -> DataFrame:
+    """(doc_id or out_id, band, key): one row per minhash band of each
+    signature, key = the band's r minhash values joined with '-'."""
+    bands = sigs.select("doc_id", *_band_key_cols(r, n_bands))
+    keys = [F.col(f"band{b}") for b in range(n_bands)]
+    return stack_bands(bands, "doc_id", keys, out_id=out_id)
+
+
+def _band_candidates(sigs: DataFrame, r: int, n_bands: int) -> DataFrame:
+    """(doc_a, doc_b): distinct doc pairs sharing at least one full band."""
+    return band_self_join(
+        _band_stack(sigs, r, n_bands),
+        "doc_id",
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+    ).distinct()
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     shingle_n: int = 1,
@@ -480,34 +501,7 @@ def minhash_lsh_pairs(
     sigs = tok2.groupBy("doc_id").agg(*_signature_aggs(k)).localCheckpoint(
         eager=False
     )
-    bands = sigs.select("doc_id", *_band_key_cols(r, n_bands))
-    # one explode, not an n_bands-way union: a 32-branch union is 32 plan
-    # subtrees and 32 task sets; the exploded struct array is a single
-    # narrow pass emitting the same (doc_id, band, key) rows
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b_ = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(sigs, r, n_bands)
     # Confirm candidates against exact set Jaccard via per-doc token-set
     # arrays + array_intersect: cost is |candidates| * O(set size), instead
     # of an inverted-index pair explosion (which degenerates quadratically
@@ -585,35 +579,16 @@ def minhash_star_edges(
     n_bands: int = P.MINHASH_BANDS,
     fast_hash: bool = False,
 ) -> DataFrame:
-    """(doc_a, doc_b) edges whose connected components are IDENTICAL to
-    ``minhash_lsh_pairs``'s confirmed pair graph's, with edge count LINEAR
-    in duplicate-class size — the text twin of the round-9 media star-edge
-    fix (round-10 judge ask #1).
-
-    Real text corpora are exact-duplicate-heavy (boilerplate, mirrors):
-    n docs with the same token SET are a clique of C(n,2) confirmed pairs
-    (identical minhash signatures share every band; Jaccard 1), so feeding
-    the pair listing into connected components makes the Pregel input
-    quadratic in class size.  Components don't need clique edges:
-
-    1. group docs by EXACT signature — the md5 of the sorted wide-key
-       token set (md5 per the repo's 128-bit equality-key rule; the
-       fixed-width hex elements make the ','-join injective);
-       representative = min(doc_id) per class -> one STAR edge per
-       non-rep member;
-    2. run the banded minhash join + exact-Jaccard confirm over DISTINCT
-       token sets only (the rep docs) -> one BRIDGE edge per confirmed
-       class pair.
-
-    Equivalence: every star edge connects docs with the SAME token set
-    (Jaccard 1 >= threshold and identical signatures share all bands —
-    a confirmed pair), and every bridge IS a confirmed pair.  Conversely
-    both candidacy (band equality over the minhash signature, a function
-    of the token set) and the exact-Jaccard verify (a function of the two
-    token sets) depend on the token sets alone, so any confirmed pair
-    (a, b) is star-connected to (rep_a, rep_b) which is bridge-connected
-    (or same-class) — closures equal.  Edge count: (docs - distinct
-    token sets) stars + confirmed class pairs.
+    """(doc_a, doc_b) star + bridge edges whose connected components are
+    IDENTICAL to ``minhash_lsh_pairs``'s confirmed pair graph's, with edge
+    count LINEAR in duplicate-class size — the text twin of the media
+    star-edge generators (equivalence proof in operators/banding.py).
+    The exact signature is the md5 of the sorted wide-key token set (the
+    repo's 128-bit equality-key rule; the fixed-width hex elements make
+    the ','-join injective), rep = min(doc_id) per class; bridges are the
+    banded minhash join + exact-Jaccard confirm over the rep docs.  Both
+    candidacy and the Jaccard verify are functions of the token sets
+    alone, which is what the proof needs.
 
     Scale shape: the tokenize pass, the per-doc set build and the K-agg
     signature build are the SAME artifacts minhash_lsh_pairs creates; the
@@ -652,31 +627,7 @@ def minhash_star_edges(
         .agg(*_signature_aggs(k))
         .localCheckpoint(eager=False)
     )
-    bands = rep_sigs.select("doc_id", *_band_key_cols(r, n_bands))
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b_ = stacked.alias("a"), stacked.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(rep_sigs, r, n_bands)
     sa = rep_sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
     sb = rep_sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
     bridges = _confirm_jaccard(cand, sa, sb, "doc_a", "doc_b", threshold).select(
@@ -853,41 +804,23 @@ def simhash_neardup_pairs(
         )
     band_bits = P.SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
+    keys = [
+        F.shiftright(F.col("simhash"), j * band_bits).bitwiseAND(F.lit(mask))
+        for j in range(n_bands)
+    ]
     # pin the fingerprint table (lazy localCheckpoint): both sides of the
     # candidate self-join read it, and without pinning the tokenize + 64-sum
     # subtree executes twice; fingerprints are 8 bytes/doc — the persisted-
     # artifact shape a production near-dup pipeline uses anyway
     fp = simhash_fingerprints(docs).localCheckpoint(eager=False)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.shiftright(F.col("simhash"), j * band_bits)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_val"),
-            )
-            for j in range(n_bands)
-        ]
-    )
-    bands = fp.select(
-        "doc_id", "simhash", F.explode(band_structs).alias("bv")
-    ).select("doc_id", "simhash", F.col("bv.band").alias("band"), F.col("bv.band_val").alias("band_val"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = band_self_join(
+        stack_bands(fp, "doc_id", keys, carry=["simhash"]),
+        "doc_id",
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.simhash").alias("sim_a"),
+        F.col("b.simhash").alias("sim_b"),
+    ).dropDuplicates(["doc_a", "doc_b"])
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return cand.select(
         "doc_a", "doc_b", hamming.cast("int").alias("hamming")
@@ -1087,20 +1020,7 @@ def incremental_neardup_pairs(
 
     def _stack(tok2: DataFrame, out_id: str) -> DataFrame:
         sigs = tok2.groupBy("doc_id").agg(*_signature_aggs(k))
-        bands = sigs.select("doc_id", *_band_key_cols(r, n_bands))
-        return bands.select(
-            F.col("doc_id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), F.col(f"band{b}").alias("key")
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        return _band_stack(sigs, r, n_bands, out_id)
 
     cand = (
         _stack(tok_new, "new_id")

@@ -42,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import codecs
+from . import banding, codecs
 
 # The mapInPandas closures below call codecs functions on EXECUTOR python
 # workers.  The driver contract imports this package via a bare
@@ -204,38 +204,53 @@ synthesize_image = codecs.synthesize_image
 synthesize_wav = codecs.synthesize_wav
 
 
-def attach_synthetic_media(docs: DataFrame, every_n_audio: int = 2) -> DataFrame:
-    """Media table with REAL decodable payloads (PPM images, WAV audio),
-    generated deterministically from doc_id inside an Arrow batch stage —
-    payloads are born on the executors, never on the driver.
+def _attach_encoded(docs: DataFrame, encode) -> DataFrame:
+    """MEDIA_SCHEMA table of payloads born on the executors: one Arrow
+    batch stage calls ``encode(media_id) -> (payload, media_type)`` per
+    doc_id, so payloads never visit the driver.
 
-    Repartitioned to the session's parallelism like
-    attach_synthetic_images (round-8): the id projection of one small
-    parquet is 1-2 splits, which would serialize the per-row codec work."""
+    ``encode`` runs on executor python workers, which do not have this
+    package importable (see the register_pickle_by_value note): it must
+    call only ``codecs`` functions and plain locals, never a module-level
+    function of this module.
+
+    The id frame is repartitioned to the session's parallelism: the
+    testdata documents parquet is one small file -> 1-2 byte-sized scan
+    splits, which would serialize the CPU-dense synth+encode stages on a
+    couple of tasks (DESIGN.md "Bytes-based splits starve CPU-dense
+    operators"); a real media corpus arrives in thousands of splits.
+    Deterministic hash partitioning on media_id, so derived answers are
+    unchanged."""
     ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
         docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            contents, types = [], []
-            for mid in pdf["media_id"]:
-                if mid % every_n_audio == 0:
-                    contents.append(codecs.synthesize_wav(int(mid)))
-                    types.append("audio/wav")
-                else:
-                    contents.append(codecs.synthesize_image(int(mid)))
-                    types.append("image/x-portable-pixmap")
+            encoded = [encode(int(mid)) for mid in pdf["media_id"]]
+            contents = [c for c, _ in encoded]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "content": contents,
-                    "media_type": types,
+                    "media_type": [t for _, t in encoded],
                     "n_bytes": [len(c) for c in contents],
                 }
             )
 
     return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+
+
+def attach_synthetic_media(docs: DataFrame, every_n_audio: int = 2) -> DataFrame:
+    """Media table with REAL decodable payloads: WAV audio for every
+    ``every_n_audio``-th id, PPM images otherwise."""
+
+    def encode(mid: int):
+        if mid % every_n_audio == 0:
+            return codecs.synthesize_wav(mid), "audio/wav"
+        return codecs.synthesize_image(mid), "image/x-portable-pixmap"
+
+    return _attach_encoded(docs, encode)
 
 
 def resize_images(media: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
@@ -463,51 +478,19 @@ def _gradient_rgb(media_id: int) -> np.ndarray:
 def attach_synthetic_images(docs: DataFrame) -> DataFrame:
     """Mixed-format image table with REAL compressed payloads: media_id % 3
     selects P6 PPM (raw) / PNG (zlib-compressed) / baseline JPEG (lossy),
-    all encoding the same deterministic gradient.  Payloads are born on
-    executors inside the Arrow batch stage, like attach_synthetic_media.
-
-    The id frame is repartitioned to the session's parallelism: the
-    testdata documents parquet is one small file -> 1-2 byte-sized scan
-    splits, which would serialize the CPU-dense synth+encode+decode
-    stages on a couple of tasks (same failure mode as DESIGN.md
-    "Bytes-based splits starve CPU-dense operators"); a real media corpus
-    arrives in thousands of splits.  Deterministic hash partitioning on
-    media_id, so derived answers are unchanged."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
-    # captured as plain ints: the closure must reference only codecs
-    # (registered by value) and locals, never this module (workers do not
-    # have the package importable — see the register_pickle_by_value note)
+    all encoding the same deterministic gradient."""
     w, h, q = DECODE_WIDTH, DECODE_HEIGHT, JPEG_QUALITY
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents, types = [], []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                sel = int(mid) % 3
-                if sel == 0:
-                    payload = codecs.encode_ppm(arr)
-                    mt = "image/x-portable-pixmap"
-                elif sel == 1:
-                    payload = codecs.encode_png(arr)
-                    mt = "image/png"
-                else:
-                    payload = codecs.encode_jpeg(arr, q)
-                    mt = "image/jpeg"
-                contents.append(payload)
-                types.append(mt)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": types,
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        sel = mid % 3
+        if sel == 0:
+            return codecs.encode_ppm(arr), "image/x-portable-pixmap"
+        if sel == 1:
+            return codecs.encode_png(arr), "image/png"
+        return codecs.encode_jpeg(arr, q), "image/jpeg"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 #: 4:2:0/4:2:2 mean-abs-err tolerance vs the clean gradient: quantization
@@ -520,30 +503,15 @@ def attach_subsampled_images(docs: DataFrame) -> DataFrame:
     """Chroma-subsampled JPEG corpus (round-9 judge ask #2): media_id % 2
     selects 4:2:0 / 4:2:2 payloads of the same deterministic gradient —
     the dominant real-corpus JPEG profile, previously gated at the
-    UnsupportedMediaError seam.  Same executor-side synthesis shape as
-    attach_synthetic_images."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
+    UnsupportedMediaError seam."""
     w, h, q = DECODE_WIDTH, DECODE_HEIGHT, JPEG_QUALITY
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                ss = "420" if mid % 2 == 0 else "422"
-                contents.append(codecs.encode_jpeg(arr, q, subsampling=ss))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "image/jpeg",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        ss = "420" if mid % 2 == 0 else "422"
+        return codecs.encode_jpeg(arr, q, subsampling=ss), "image/jpeg"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def media_decode_subsampled_sql() -> str:
@@ -586,32 +554,15 @@ def attach_progressive_images(docs: DataFrame) -> DataFrame:
     """Progressive (SOF2) JPEG corpus (round-10 judge ask #5): media_id % 2
     selects 4:4:4 / 4:2:0 progressive payloads of the same deterministic
     gradient — the last frequent real-corpus JPEG profile that was gated
-    at the UnsupportedMediaError seam.  Same executor-side synthesis
-    shape as attach_subsampled_images."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
+    at the UnsupportedMediaError seam."""
     w, h, q = DECODE_WIDTH, DECODE_HEIGHT, JPEG_QUALITY
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                ss = "444" if mid % 2 == 0 else "420"
-                contents.append(
-                    codecs.encode_jpeg_progressive(arr, q, subsampling=ss)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "image/jpeg",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        ss = "444" if mid % 2 == 0 else "420"
+        return codecs.encode_jpeg_progressive(arr, q, subsampling=ss), "image/jpeg"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def media_decode_progressive_sql() -> str:
@@ -659,29 +610,13 @@ def attach_lossless_images(docs: DataFrame) -> DataFrame:
     1 + id%7 — every T.81 Annex H predictor exercised across the corpus.
     Decode must reproduce the gradient BIT-FOR-BIT, so the oracle pins
     the exact lossless digest with a zero error tolerance."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
     w, h = DECODE_WIDTH, DECODE_HEIGHT
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                contents.append(
-                    codecs.encode_jpeg_lossless(arr, 1 + int(mid) % 7)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "image/jpeg",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        return codecs.encode_jpeg_lossless(arr, 1 + mid % 7), "image/jpeg"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def media_decode_lossless_sql() -> str:
@@ -723,35 +658,18 @@ def attach_restart_images(docs: DataFrame) -> DataFrame:
     markers splitting every scan (interval 1 + id%3 MCUs, 4:4:4/4:2:0 by
     id%2) — the error-resilience layout real encoders emit, previously
     the last progressive profile gated at the UnsupportedMediaError
-    seam.  Same executor-side synthesis shape as
-    attach_progressive_images."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
+    seam."""
     w, h, q = DECODE_WIDTH, DECODE_HEIGHT, JPEG_QUALITY
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                ss = "444" if mid % 2 == 0 else "420"
-                contents.append(
-                    codecs.encode_jpeg_progressive(
-                        arr, q, subsampling=ss,
-                        restart_interval=1 + int(mid) % 3,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "image/jpeg",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        ss = "444" if mid % 2 == 0 else "420"
+        payload = codecs.encode_jpeg_progressive(
+            arr, q, subsampling=ss, restart_interval=1 + mid % 3
+        )
+        return payload, "image/jpeg"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def media_decode_restart_sql() -> str:
@@ -805,27 +723,13 @@ def attach_interlaced_images(docs: DataFrame) -> DataFrame:
     is an independently filtered sub-image scattered onto the output
     grid — codecs._ADAM7).  Lossless, so decoded pixels must equal the
     synthesis gradient bit-for-bit at any SF."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
     w, h = DECODE_WIDTH, DECODE_HEIGHT
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = []
-            for mid in pdf["media_id"]:
-                arr = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                contents.append(codecs.encode_png(arr, interlaced=True))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "image/png",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.decode_ppm(codecs.synthesize_image(mid, w, h))
+        return codecs.encode_png(arr, interlaced=True), "image/png"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def media_decode_interlaced_sql() -> str:
@@ -978,31 +882,14 @@ def attach_pattern_images(docs: DataFrame) -> DataFrame:
     differ by one pattern block.  Lossless formats only, so decoded
     pixels equal the synthesis contract exactly at any SF (JPEG's
     decode path is oracle-covered separately by media_decode)."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents, types = [], []
-            for mid in pdf["media_id"]:
-                arr = codecs.pattern_pixels(int(mid))
-                if mid % 2 == 0:
-                    contents.append(codecs.encode_ppm(arr))
-                    types.append("image/x-portable-pixmap")
-                else:
-                    contents.append(codecs.encode_png(arr))
-                    types.append("image/png")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": types,
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def encode(mid: int):
+        arr = codecs.pattern_pixels(mid)
+        if mid % 2 == 0:
+            return codecs.encode_ppm(arr), "image/x-portable-pixmap"
+        return codecs.encode_png(arr), "image/png"
 
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(docs, encode)
 
 
 def image_dhash(media: DataFrame) -> DataFrame:
@@ -1032,80 +919,15 @@ def image_dhash(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=DHASH_SCHEMA)
 
 
-def _hamming64(a_col: str, b_col: str):
-    """Exact 64-bit Hamming distance between two 16-hex-char columns as a
-    sum of four 16-bit chunk xors — stays in whole-stage codegen."""
-    total = F.lit(0).cast("long")
-    for i in range(4):
-        ca = F.conv(F.substring(F.col(a_col), 4 * i + 1, 4), 16, 10).cast("long")
-        cb = F.conv(F.substring(F.col(b_col), 4 * i + 1, 4), 16, 10).cast("long")
-        total = total + F.bit_count(ca.bitwiseXOR(cb))
-    return total
-
-
-def _image_sig_classes(hashes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(sigs, members) from a dHash table: one row per DISTINCT 64-bit
-    signature (dhash, rep = min media_id) and the clip->rep map.  Both
-    lazily checkpointed (multiply referenced)."""
-    sigs = (
-        hashes.groupBy("dhash")
-        .agg(F.min("media_id").alias("rep"))
-        .localCheckpoint(eager=False)
-    )
-    members = (
-        hashes.join(sigs, "dhash")
-        .select("media_id", "rep")
-        .localCheckpoint(eager=False)
-    )
-    return sigs, members
-
-
-def _image_confirmed_sig_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
-    """(rep_a, rep_b, hamming): confirmed DISTINCT-signature pairs — the
-    4x16-bit band join + exact 64-bit Hamming verify over signatures.
-
-    The hamming column is computed BEFORE the distinct and the result is
-    lazily checkpointed: rep identifies its signature uniquely, so
-    (rep_a, rep_b) determines the metric and both forms are equivalent —
-    but carrying the raw signature columns above the distinct and under
-    the member-expansion joins sends Catalyst's constraint propagation
-    into a measured multi-minute ExpressionSet grind (the bit_count
-    verify tree re-derived through every join), while this shape plans
-    in milliseconds and the checkpoint caps the Pregel consumers'
-    re-planning cost."""
-    stacked = sigs.select(
-        "rep",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.substring("dhash", 4 * i + 1, 4).alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "rep", "dhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.rep").alias("rep_a"),
-            F.col("b.rep").alias("rep_b"),
-            _hamming64("a.dhash", "b.dhash").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-        .localCheckpoint(eager=False)
+def _image_banding(max_hamming: int) -> dict:
+    """Image banding spec: signature = the 64-bit dHash, bands = its four
+    16-bit substrings, distance = exact 64-bit Hamming."""
+    return dict(
+        sig_cols=["dhash"],
+        keys=[F.substring("dhash", 4 * i + 1, 4) for i in range(4)],
+        distance=lambda a, b: banding.hamming64(f"{a}.dhash", f"{b}.dhash"),
+        dist_col="hamming",
+        max_dist=max_hamming,
     )
 
 
@@ -1118,80 +940,19 @@ def image_neardup_pairs(
     candidate; 4 <= h <= max_hamming pairs are caught when their
     differing bits cluster — same recall semantics as simhash banding);
     each candidate is verified with the exact 64-bit Hamming distance.
-
-    Round-10: like ``video_neardup_pairs``, the band join runs over
-    DISTINCT signatures only and confirmed signature pairs expand back to
-    member pairs — output identical (candidacy and the verify are
-    functions of the signatures alone; same-signature pairs measure
-    hamming 0), candidate-join input shrinks by the duplication factor on
-    exact-dup-heavy corpora.  The pair-listing contract stays quadratic
-    in class size BY DEFINITION — that is the answer, not engine cost."""
+    Banded over distinct dHashes (operators/banding.py)."""
     hashes = image_dhash(media).localCheckpoint(eager=False)
-    sigs, members = _image_sig_classes(hashes)
-    conf = _image_confirmed_sig_pairs(sigs, max_hamming)
-    ma = members.select(F.col("rep").alias("rep_a"), F.col("media_id").alias("ma"))
-    mb = members.select(F.col("rep").alias("rep_b"), F.col("media_id").alias("mb"))
-    cross = (
-        conf.join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("ma", "mb").alias("media_a"),
-            F.greatest("ma", "mb").alias("media_b"),
-            "hamming",
-        )
-    )
-    m1, m2 = members.alias("m1"), members.alias("m2")
-    intra = m1.join(
-        m2,
-        (F.col("m1.rep") == F.col("m2.rep"))
-        & (F.col("m1.media_id") < F.col("m2.media_id")),
-    ).select(
-        F.col("m1.media_id").alias("media_a"),
-        F.col("m2.media_id").alias("media_b"),
-        F.lit(0).cast("long").alias("hamming"),
-    )
-    return cross.unionAll(intra)
+    return banding.banded_pairs(hashes, "media_id", **_image_banding(max_hamming))
 
 
 def image_dedup_edges(
     media: DataFrame, max_hamming: int = DHASH_MAX_HAMMING
 ) -> DataFrame:
-    """(doc_a, doc_b) edges whose connected components are IDENTICAL to the
-    full confirmed near-dup pair graph's, with edge count LINEAR in
-    duplicate-class size (round-9 judge ask #1).
-
-    Real image corpora are exact-duplicate-heavy: n byte-identical (or
-    dHash-identical) images are a clique of C(n,2) confirmed pairs, so
-    feeding ``image_neardup_pairs`` into connected components makes the
-    Pregel input quadratic in class size — the one 100-TB sharp edge the
-    round-8 audit found.  Components don't need clique edges:
-
-    1. group by EXACT signature (the 64-bit dHash), representative =
-       min(media_id) per signature -> one STAR edge per non-rep member
-       (rep -> member);
-    2. run the banded Hamming join over DISTINCT signatures only ->
-       one BRIDGE edge (rep_a -> rep_b) per confirmed signature pair.
-
-    Equivalence proof: every star/bridge edge connects confirmed near-dups
-    (identical signatures share all four bands and measure hamming 0; a
-    bridge is a confirmed signature pair by construction), so the star
-    graph's closure is no coarser than the pair graph's.  Conversely both
-    candidacy (band-key equality) and the Hamming verify are functions of
-    the SIGNATURES alone, so any confirmed pair (a, b) is rep_a - a and
-    rep_b - b star-connected plus rep_a - rep_b bridge-connected (or
-    same-signature), and the closures are equal.  Edge count:
-    (members - distinct signatures) stars + confirmed signature pairs —
-    linear where the clique feed is quadratic.
-    """
+    """(doc_a, doc_b) star + bridge edges whose connected components equal
+    the confirmed dHash near-dup pair graph's, edge count linear in
+    duplicate-class size (proof in operators/banding.py)."""
     hashes = image_dhash(media).localCheckpoint(eager=False)
-    sigs, members = _image_sig_classes(hashes)
-    star = members.filter(F.col("media_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("media_id").alias("doc_b")
-    )
-    bridges = _image_confirmed_sig_pairs(sigs, max_hamming).select(
-        F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
-    )
-    return star.unionAll(bridges)
+    return banding.banded_star_edges(hashes, "media_id", **_image_banding(max_hamming))
 
 
 def _pattern_class_hashes() -> list[str]:
@@ -1285,23 +1046,9 @@ AUDIO_FP_MAX_DEV = 1
 def attach_fp_tones(docs: DataFrame) -> DataFrame:
     """Audio-dedup corpus: PCM WAV tones with planted +2 Hz detune pairs
     (classes c and c+64 share a base frequency)."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
+    return _attach_encoded(
+        docs, lambda mid: (codecs.synthesize_fp_tone(mid), "audio/wav")
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = [codecs.synthesize_fp_tone(int(m)) for m in pdf["media_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "audio/wav",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
-
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def audio_fingerprints(media: DataFrame) -> DataFrame:
@@ -1328,73 +1075,24 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
 
 
-def _audio_sig_classes(fps: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(sigs, members) from a fingerprint table: one row per DISTINCT
-    8-window zero-crossing signature (w0..w7, rep = min media_id) and the
-    clip->rep map.  Both lazily checkpointed (multiply referenced)."""
-    wcols = [f"w{i}" for i in range(codecs.FP_WINDOWS)]
-    sigs = (
-        fps.groupBy(*wcols)
-        .agg(F.min("media_id").alias("rep"))
-        .localCheckpoint(eager=False)
-    )
-    members = (
-        fps.join(sigs, wcols)
-        .select("media_id", "rep")
-        .localCheckpoint(eager=False)
-    )
-    return sigs, members
-
-
-def _audio_confirmed_sig_pairs(sigs: DataFrame, max_dev: int) -> DataFrame:
-    """(rep_a, rep_b, max_dev): confirmed DISTINCT-signature pairs — the
-    two-offset grid join + exact max per-window deviation verify.
-
-    Same optimizer-shape rule as _image_confirmed_sig_pairs: the metric
-    is computed BEFORE the distinct (rep determines its signature, so the
-    forms are equivalent) and the confirmed set is lazily checkpointed —
-    carrying 16 window columns above the distinct and under the
-    expansion joins triggers Catalyst's constraint-propagation blowup on
-    the greatest(abs(...)) tree."""
+def _audio_banding(max_dev: int) -> dict:
+    """Audio banding spec: signature = the 8-window zero-crossing
+    fingerprint, bands = the two offset grids (zc + g) // 2 per window,
+    distance = exact max per-window deviation."""
     n_windows = codecs.FP_WINDOWS
     wcols = [f"w{i}" for i in range(n_windows)]
-    stacked = sigs.select(
-        "rep",
-        *wcols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(w * 2 + g).alias("band"),
-                        ((F.col(f"w{w}") + F.lit(g)) / 2).cast("long").alias("key"),
-                    )
-                    for w in range(n_windows)
-                    for g in (0, 1)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "rep", *wcols, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = stacked.alias("a"), stacked.alias("b")
-    dev = F.greatest(
-        *[F.abs(F.col(f"a.w{i}") - F.col(f"b.w{i}")) for i in range(n_windows)]
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.rep").alias("rep_a"),
-            F.col("b.rep").alias("rep_b"),
-            dev.alias("max_dev"),
-        )
-        .distinct()
-        .filter(F.col("max_dev") <= max_dev)
-        .localCheckpoint(eager=False)
+    return dict(
+        sig_cols=wcols,
+        keys=[
+            ((F.col(f"w{w}") + F.lit(g)) / 2).cast("long")
+            for w in range(n_windows)
+            for g in (0, 1)
+        ],
+        distance=lambda a, b: F.greatest(
+            *[F.abs(F.col(f"{a}.{c}") - F.col(f"{b}.{c}")) for c in wcols]
+        ),
+        dist_col="max_dev",
+        max_dist=max_dev,
     )
 
 
@@ -1405,58 +1103,19 @@ def audio_neardup_pairs(
     Candidate recall is EXACT for the confirmed set (two offset grids per
     window, see module note); the verify computes the exact max
     per-window zero-crossing deviation — pure column math after the
-    decode stage.
-
-    Round-10: the bucket join runs over DISTINCT signatures only and
-    confirmed signature pairs expand back to member pairs — output
-    identical (candidacy and the verify are functions of the signatures
-    alone; same-signature pairs measure max_dev 0), candidate-join input
-    shrinks by the duplication factor on exact-dup-heavy corpora."""
+    decode stage.  Banded over distinct fingerprints (operators/banding.py)."""
     fps = audio_fingerprints(media).localCheckpoint(eager=False)
-    sigs, members = _audio_sig_classes(fps)
-    conf = _audio_confirmed_sig_pairs(sigs, max_dev)
-    ma = members.select(F.col("rep").alias("rep_a"), F.col("media_id").alias("ma"))
-    mb = members.select(F.col("rep").alias("rep_b"), F.col("media_id").alias("mb"))
-    cross = (
-        conf.join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("ma", "mb").alias("media_a"),
-            F.greatest("ma", "mb").alias("media_b"),
-            "max_dev",
-        )
-    )
-    m1, m2 = members.alias("m1"), members.alias("m2")
-    intra = m1.join(
-        m2,
-        (F.col("m1.rep") == F.col("m2.rep"))
-        & (F.col("m1.media_id") < F.col("m2.media_id")),
-    ).select(
-        F.col("m1.media_id").alias("media_a"),
-        F.col("m2.media_id").alias("media_b"),
-        F.lit(0).cast("long").alias("max_dev"),
-    )
-    return cross.unionAll(intra)
+    return banding.banded_pairs(fps, "media_id", **_audio_banding(max_dev))
 
 
 def audio_dedup_edges(
     media: DataFrame, max_dev: int = AUDIO_FP_MAX_DEV
 ) -> DataFrame:
-    """(doc_a, doc_b) edges component-equivalent to the confirmed audio
-    near-dup pair graph, edges linear in duplicate-class size — the audio
-    twin of ``image_dedup_edges`` (signature = the 8-window zero-crossing
-    fingerprint; candidates via the two-offset grid over DISTINCT
-    signatures; same star + bridge equivalence argument, since candidacy
-    and the max-deviation verify are functions of the signatures alone)."""
+    """(doc_a, doc_b) star + bridge edges component-equivalent to the
+    confirmed audio near-dup pair graph, edges linear in duplicate-class
+    size (operators/banding.py)."""
     fps = audio_fingerprints(media).localCheckpoint(eager=False)
-    sigs, members = _audio_sig_classes(fps)
-    star = members.filter(F.col("media_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("media_id").alias("doc_b")
-    )
-    bridges = _audio_confirmed_sig_pairs(sigs, max_dev).select(
-        F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
-    )
-    return star.unionAll(bridges)
+    return banding.banded_star_edges(fps, "media_id", **_audio_banding(max_dev))
 
 
 def _fp_class_signatures() -> list[list[int]]:
@@ -1547,25 +1206,9 @@ def attach_pattern_videos(docs: DataFrame) -> DataFrame:
     """Video-dedup corpus: RAWV clips whose frame f carries the block
     pattern of class (media_id + 16*f) % 256 — clips of consecutive
     classes 2g/2g+1 are planted near-dups at EVERY sampled position."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
+    return _attach_encoded(
+        docs, lambda mid: (codecs.synthesize_pattern_video(mid), "video/x-rawv")
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = [
-                codecs.synthesize_pattern_video(int(m)) for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "video/x-rawv",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
-
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def video_fingerprints(media: DataFrame) -> DataFrame:
@@ -1600,86 +1243,23 @@ def video_fingerprints(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=VIDEO_FP_SCHEMA)
 
 
-def _video_signature_classes(fps: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(sigs, members) from a fingerprint table: ``sigs`` is one row per
-    DISTINCT sampled-frame signature (f0..f{P-1}, rep = min media_id),
-    ``members`` maps every clip to its signature's rep.  Both lazily
-    checkpointed — sigs is referenced by the band stack and both expansion
-    sides, members by three joins."""
-    fcols = [f"f{p}" for p in range(codecs.VIDEO_POSITIONS)]
-    sigs = (
-        fps.groupBy(*fcols)
-        .agg(F.min("media_id").alias("rep"))
-        .localCheckpoint(eager=False)
-    )
-    members = (
-        fps.join(sigs, fcols)
-        .select("media_id", "rep")
-        .localCheckpoint(eager=False)
-    )
-    return sigs, members
-
-
-def _video_stacked_bands(sigs: DataFrame) -> DataFrame:
-    """Explode a distinct-signature table into (rep, f0..f{P-1}, band, key)
-    rows — one 16-bit band key per (position, band index)."""
+def _video_banding(max_hamming: int) -> dict:
+    """Video banding spec: signature = the per-position sampled-frame
+    dHash tuple, bands = the four 16-bit substrings of each position's
+    hash, distance = exact MAX per-position 64-bit Hamming."""
     n_pos = codecs.VIDEO_POSITIONS
-    fcols = [f"f{p}" for p in range(n_pos)]
-    return sigs.select(
-        "rep",
-        *fcols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p * 4 + i).alias("band"),
-                        F.substring(f"f{p}", 4 * i + 1, 4).alias("key"),
-                    )
-                    for p in range(n_pos)
-                    for i in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "rep", *fcols, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-
-
-def _video_confirmed_sig_pairs(
-    sigs: DataFrame, max_hamming: int
-) -> DataFrame:
-    """(rep_a, rep_b, max_hamming): confirmed DISTINCT-signature pairs —
-    the per-position band join + exact MAX-Hamming verify, run over
-    signatures rather than clips.  Candidacy and the verify are functions
-    of the signatures alone, so this is the complete cross-signature
-    confirmed set.
-
-    Optimizer-shape rule (shared with _image/_audio_confirmed_sig_pairs):
-    the MAX-Hamming is computed BEFORE the distinct — (rep_a, rep_b)
-    determines the signature pair, so the forms are equivalent — and the
-    confirmed set is lazily checkpointed, keeping the bit_count verify
-    trees out of Catalyst's constraint propagation under the expansion
-    joins."""
-    n_pos = codecs.VIDEO_POSITIONS
-    a, b = _video_stacked_bands(sigs).alias("a"), _video_stacked_bands(sigs).alias("b")
-    maxham = F.greatest(
-        *[_hamming64(f"a.f{p}", f"b.f{p}") for p in range(n_pos)]
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.rep").alias("rep_a"),
-            F.col("b.rep").alias("rep_b"),
-            maxham.alias("max_hamming"),
-        )
-        .distinct()
-        .filter(F.col("max_hamming") <= max_hamming)
-        .localCheckpoint(eager=False)
+    return dict(
+        sig_cols=[f"f{p}" for p in range(n_pos)],
+        keys=[
+            F.substring(f"f{p}", 4 * i + 1, 4)
+            for p in range(n_pos)
+            for i in range(4)
+        ],
+        distance=lambda a, b: F.greatest(
+            *[banding.hamming64(f"{a}.f{p}", f"{b}.f{p}") for p in range(n_pos)]
+        ),
+        dist_col="max_hamming",
+        max_dist=max_hamming,
     )
 
 
@@ -1689,67 +1269,19 @@ def video_neardup_pairs(
     """(media_a, media_b, max_hamming): confirmed video near-dup pairs —
     candidates share a 16-bit band of the same POSITION's frame hash,
     verified with the exact maximum per-position 64-bit Hamming distance.
-
-    Round-10 (judge ask #4): the band join runs over DISTINCT signatures
-    only, then confirmed signature pairs expand back to member pairs —
-    the pair-listing CONTRACT (every confirmed clip pair, quadratic in
-    duplicate-class size by definition) is unchanged, but the candidate
-    join input shrinks from clips x P*4 band rows to distinct-signatures
-    x P*4 on exact-dup-heavy corpora (measured in
-    tools/probe_star_edge_scaling.py).  Output is identical to banding
-    over clips because both candidacy (band-key equality) and the
-    MAX-Hamming verify are functions of the signatures alone: same-
-    signature pairs share every band and measure 0 <= max_hamming, and a
-    cross-signature clip pair is a candidate/confirmed iff its signature
-    pair is."""
+    Banded over distinct signatures (operators/banding.py)."""
     fps = video_fingerprints(media).localCheckpoint(eager=False)
-    sigs, members = _video_signature_classes(fps)
-    conf = _video_confirmed_sig_pairs(sigs, max_hamming)
-    ma = members.select(F.col("rep").alias("rep_a"), F.col("media_id").alias("ma"))
-    mb = members.select(F.col("rep").alias("rep_b"), F.col("media_id").alias("mb"))
-    cross = (
-        conf.join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("ma", "mb").alias("media_a"),
-            F.greatest("ma", "mb").alias("media_b"),
-            "max_hamming",
-        )
-    )
-    m1, m2 = members.alias("m1"), members.alias("m2")
-    intra = m1.join(
-        m2,
-        (F.col("m1.rep") == F.col("m2.rep"))
-        & (F.col("m1.media_id") < F.col("m2.media_id")),
-    ).select(
-        F.col("m1.media_id").alias("media_a"),
-        F.col("m2.media_id").alias("media_b"),
-        F.lit(0).cast("long").alias("max_hamming"),
-    )
-    return cross.unionAll(intra)
+    return banding.banded_pairs(fps, "media_id", **_video_banding(max_hamming))
 
 
 def video_dedup_edges(
     media: DataFrame, max_hamming: int = VIDEO_MAX_HAMMING
 ) -> DataFrame:
-    """(doc_a, doc_b) edges component-equivalent to the confirmed video
-    near-dup pair graph, edges LINEAR in duplicate-class size — the video
-    twin of ``image_dedup_edges``/``audio_dedup_edges`` (round-10 judge
-    ask #2).  Signature = the per-position sampled-frame dHash tuple;
-    one STAR edge per non-rep member of each signature class, one BRIDGE
-    edge per confirmed DISTINCT-signature pair (per-position band join +
-    exact MAX-Hamming verify).  Same equivalence argument as the image
-    family: candidacy and the verify are functions of the signatures
-    alone, so the star graph's closure equals the pair graph's."""
+    """(doc_a, doc_b) star + bridge edges component-equivalent to the
+    confirmed video near-dup pair graph, edges LINEAR in duplicate-class
+    size (operators/banding.py)."""
     fps = video_fingerprints(media).localCheckpoint(eager=False)
-    sigs, members = _video_signature_classes(fps)
-    star = members.filter(F.col("media_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("media_id").alias("doc_b")
-    )
-    bridges = _video_confirmed_sig_pairs(sigs, max_hamming).select(
-        F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
-    )
-    return star.unionAll(bridges)
+    return banding.banded_star_edges(fps, "media_id", **_video_banding(max_hamming))
 
 
 def _video_class_signatures() -> list[list[str]]:
@@ -1928,29 +1460,11 @@ def attach_mjpeg_videos(docs: DataFrame) -> DataFrame:
     """MJPEG-MP4 corpus: one deterministic clip per doc (frame f = the
     synthesis gradient of id media_id+f, JPEG-coded at q90; frame count
     6..12 varying with the id so the metadata oracle is a non-trivial
-    closed form).  Same executor-side synthesis shape as the other
-    attach_* helpers."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
-    )
+    closed form)."""
     w, h, q = DECODE_WIDTH, DECODE_HEIGHT, JPEG_QUALITY
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = [
-                codecs.synthesize_mjpeg_video(int(m), w, h, q)
-                for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "video/mp4",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
-
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _attach_encoded(
+        docs, lambda mid: (codecs.synthesize_mjpeg_video(mid, w, h, q), "video/mp4")
+    )
 
 
 def video_container_meta(media: DataFrame) -> DataFrame:
@@ -2109,28 +1623,10 @@ AUDIO_ADPCM_ERR_TOL = 0.15
 
 def attach_compressed_tones(docs: DataFrame) -> DataFrame:
     """Compressed-audio corpus: one G.711/ADPCM WAV per doc (codec by
-    id%3, tone class by id%128).  Same executor-side synthesis shape as
-    the other attach_* helpers."""
-    ids = docs.select(F.col("doc_id").cast("long").alias("media_id")).repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, F.col("media_id")
+    id%3, tone class by id%128)."""
+    return _attach_encoded(
+        docs, lambda mid: (codecs.synthesize_compressed_tone(mid), "audio/wav")
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            contents = [
-                codecs.synthesize_compressed_tone(int(m))
-                for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": contents,
-                    "media_type": "audio/wav",
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
-
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def decode_audio_audit(

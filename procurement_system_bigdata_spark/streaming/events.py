@@ -608,6 +608,7 @@ def neardup_ingest_batch_fn(
 
     from ..functions import portable as P
     from ..operators import dedup as dd
+    from ..operators.banding import band_self_join
 
     k = k if k is not None else P.MINHASH_K_ORACLE
     n_bands = n_bands if n_bands is not None else P.MINHASH_BANDS_ORACLE
@@ -626,25 +627,6 @@ def neardup_ingest_batch_fn(
             F.sort_array(F.collect_set("hw")).alias("hs")
         )
         return sigs.join(hs, "doc_id")
-
-    def _stack(rows: DataFrame, out_id: str) -> DataFrame:
-        bands = rows.select("doc_id", *dd._band_key_cols(r, n_bands))
-        return bands.select(
-            F.col("doc_id").alias(out_id),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.col(f"band{b}").alias("key"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            out_id, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-        )
 
     def _confirmed(cand: DataFrame, left: DataFrame, right: DataFrame):
         # fused single-intersect confirm (round-11) — the shared batch
@@ -669,13 +651,15 @@ def neardup_ingest_batch_fn(
         if batch_id <= committed:
             return
         batch_rows = _sig_rows(batch_df).localCheckpoint()
-        new_stack = _stack(batch_rows, "new_id").localCheckpoint(eager=False)
+        new_stack = dd._band_stack(batch_rows, r, n_bands, "new_id").localCheckpoint(
+            eager=False
+        )
         dupped_ids = None
         index = (
             spark.read.parquet(index_dir) if os.path.exists(index_dir) else None
         )
         if index is not None:
-            idx_stack = _stack(index, "corpus_id")
+            idx_stack = dd._band_stack(index, r, n_bands, "corpus_id")
             cand = (
                 new_stack.join(
                     idx_stack,
@@ -688,20 +672,13 @@ def neardup_ingest_batch_fn(
             dupped_ids = _confirmed(cand, batch_rows, index).select(
                 F.col("new_id").alias("doc_id")
             )
-        a, b = new_stack.alias("a"), new_stack.alias("b")
-        intra_cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.new_id") > F.col("b.new_id")),
-            )
-            .select(
-                F.col("a.new_id").alias("new_id"),
-                F.col("b.new_id").alias("other_id"),
-            )
-            .distinct()
-        )
+        # a batch doc is dupped by a LOWER-id one: the higher id is new_id
+        intra_cand = band_self_join(
+            new_stack,
+            "new_id",
+            F.col("b.new_id").alias("new_id"),
+            F.col("a.new_id").alias("other_id"),
+        ).distinct()
         intra_dupped = _confirmed(intra_cand, batch_rows, batch_rows).select(
             F.col("new_id").alias("doc_id")
         )

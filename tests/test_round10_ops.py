@@ -13,7 +13,7 @@ from conftest import SF_DIR, assert_matches_oracle
 from pyspark.sql import functions as F
 
 from procurement_system_bigdata_spark.catalog import load_table
-from procurement_system_bigdata_spark.operators import codecs, multimodal
+from procurement_system_bigdata_spark.operators import banding, codecs, multimodal
 
 
 # --- video star-edge clusters + pre-grouped banding (asks #2, #4) -------------
@@ -106,7 +106,8 @@ def test_video_band_join_input_shrinks_on_dup_heavy_corpus(spark):
     # 300 clips, 5 distinct classes -> 5 distinct signatures
     media = multimodal.attach_pattern_videos(docs)
     fps = multimodal.video_fingerprints(media).localCheckpoint()
-    sigs, members = multimodal._video_signature_classes(fps)
+    fcols = [f"f{p}" for p in range(codecs.VIDEO_POSITIONS)]
+    sigs, members = banding.signature_classes(fps, "media_id", fcols)
     assert members.count() == 300
     assert sigs.count() == 5  # band join input: 5 sigs x P*4 band rows
 

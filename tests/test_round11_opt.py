@@ -118,6 +118,22 @@ def test_bitreader_matches_reference_reader():
         assert got == want
 
 
+def test_bitreader_accumulator_holds_only_unread_bits():
+    """Consumed bits are masked off after every bit()/bits() call, so the
+    accumulator stays below 2**nbits.  Progressive refinement scans read
+    long bit()-only runs; an unmasked accumulator grows with each one and
+    every 48-bit refill shifts the whole integer (quadratic scans)."""
+    rng = np.random.RandomState(3)
+    data = bytes(rng.randint(0, 256, 4096, dtype=np.uint8))
+    new, ref = codecs._BitReader(data), _RefBitReader(data)
+    for i in range(8 * len(data) // 9):
+        if i % 64 < 48:  # long bit()-only runs, as in refinement scans
+            assert new.bit() == ref.bit()
+        else:
+            assert new.bits(17) == ref.bits(17)
+        assert new.acc < 1 << new.nbits, (i, new.nbits, new.acc.bit_length())
+
+
 def test_huff_lut_decodes_like_reference_walk():
     """Every symbol of the Annex K DC/AC tables decodes identically via
     the LUT and via the reference per-bit canonical walk, for the exact

@@ -19,7 +19,7 @@ import pytest
 from conftest import SF_DIR, assert_matches_oracle
 
 from procurement_system_bigdata_spark.catalog import load_table
-from procurement_system_bigdata_spark.operators import codecs, multimodal
+from procurement_system_bigdata_spark.operators import banding, codecs, multimodal
 
 
 # --- PNG ---------------------------------------------------------------------
@@ -381,7 +381,7 @@ def test_hamming64_column_matches_python(spark):
         for _ in range(50)
     ]
     df = spark.createDataFrame(pairs, ["dh_a", "dh_b"]).select(
-        "dh_a", "dh_b", multimodal._hamming64("dh_a", "dh_b").alias("h")
+        "dh_a", "dh_b", banding.hamming64("dh_a", "dh_b").alias("h")
     )
     for r in df.collect():
         assert r.h == bin(int(r.dh_a, 16) ^ int(r.dh_b, 16)).count("1"), (
