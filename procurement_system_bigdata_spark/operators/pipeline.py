@@ -22,7 +22,7 @@ import time
 from collections.abc import Callable
 from datetime import date
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -70,7 +70,7 @@ def retry_stage(
 
 
 def aggregate_orders(
-    orders: DataFrame, products: DataFrame, warehouses: DataFrame, full: bool = True
+    orders: DataFrame, products: DataFrame, warehouses: DataFrame
 ) -> DataFrame:
     """Q1 (reference pipeline.py:408-426): orders ⋈ products ⋈ warehouses,
     8-key GROUP BY, SUM/COUNT/MAX.  Dims are tiny -> broadcast; at scale the
@@ -89,14 +89,11 @@ def aggregate_orders(
         warehouses.name.alias("warehouse_name"),
         warehouses.city.alias("city"),
     ]
-    aggs = [F.sum(orders.quantity).alias("total_quantity")]
-    if full:
-        aggs += [
-            F.count(F.lit(1)).alias("order_count"),
-            F.max(orders.order_date).alias("order_date"),  # string max on ISO dates (A4)
-        ]
-    out = joined.groupBy(*keys).agg(*aggs)
-    return out.orderBy(F.desc("total_quantity")) if full else out
+    return joined.groupBy(*keys).agg(
+        F.sum(orders.quantity).alias("total_quantity"),
+        F.count(F.lit(1)).alias("order_count"),
+        F.max(orders.order_date).alias("order_date"),  # string max on ISO dates (A4)
+    ).orderBy(F.desc("total_quantity"))
 
 
 def safety_stock_combined(
@@ -133,12 +130,29 @@ def inventory_for_date(snapshots: DataFrame, run_date: date) -> DataFrame:
     )
 
 
+def net_demand_measures(
+    total: Column, ss_qty: Column, avail: Column, resv: Column
+) -> list[Column]:
+    """Q2 measures (reference pipeline.py:521-536): the five stock columns
+    and net_demand = GREATEST(0, orders + safety - (available - reserved)).
+    A missing safety-stock row counts as 0; ``avail``/``resv`` arrive
+    already 0-defaulted (outer-join COALESCE or conditional sums)."""
+    ss = F.coalesce(ss_qty, F.lit(0))
+    effective = avail - resv
+    return [
+        total.alias("aggregated_orders"),
+        ss.cast("long").alias("safety_stock"),
+        avail.cast("long").alias("available_stock"),
+        resv.cast("long").alias("reserved_stock"),
+        effective.cast("long").alias("effective_stock"),
+        F.greatest(F.lit(0).cast("long"), (total + ss - effective).cast("long")).alias(
+            "net_demand"
+        ),
+    ]
+
+
 def net_demand(
-    agg_orders: DataFrame,
-    ss_combined: DataFrame,
-    inventory: DataFrame,
-    run_date: date,
-    full: bool = True,
+    agg_orders: DataFrame, ss_combined: DataFrame, inventory: DataFrame, run_date: date
 ) -> DataFrame:
     """Q2 final select (reference pipeline.py:521-537) + the Python-appended
     calculation_date column (P13, pipeline.py:544-545, dd-MM-yyyy)."""
@@ -147,45 +161,37 @@ def net_demand(
         agg_orders.join(F.broadcast(ss), ["sku_id", "warehouse_id"], "left")
         .join(inventory, ["sku_code", "warehouse_code"], "left")
     )
-    avail = F.coalesce(F.col("available_qty"), F.lit(0))
-    resv = F.coalesce(F.col("reserved_qty"), F.lit(0))
-    net = F.greatest(
-        F.lit(0).cast("long"),
-        (F.col("total_quantity") + F.coalesce(F.col("ss_qty"), F.lit(0)) - (avail - resv)).cast(
-            "long"
-        ),
-    )
-    dims = ["sku_id", "sku_code", "product_name", "category", "warehouse_id",
-            "warehouse_code", "warehouse_name", "city"]
-    if not full:
-        return joined.select(*dims, net.alias("net_demand"))
     return joined.select(
-        *dims,
-        F.col("total_quantity").alias("aggregated_orders"),
-        F.coalesce(F.col("ss_qty"), F.lit(0)).cast("long").alias("safety_stock"),
-        avail.cast("long").alias("available_stock"),
-        resv.cast("long").alias("reserved_stock"),
-        (avail - resv).cast("long").alias("effective_stock"),
-        net.alias("net_demand"),
+        "sku_id", "sku_code", "product_name", "category", "warehouse_id",
+        "warehouse_code", "warehouse_name", "city",
+        *net_demand_measures(
+            F.col("total_quantity"),
+            F.col("ss_qty"),
+            F.coalesce(F.col("available_qty"), F.lit(0)),
+            F.coalesce(F.col("reserved_qty"), F.lit(0)),
+        ),
         F.lit(run_date.strftime("%d-%m-%Y")).alias("calculation_date"),
     ).orderBy(F.desc("net_demand"))
 
 
+def price_rank() -> Column:
+    """Q3 W1 (reference pipeline.py:654-662): ROW_NUMBER of each offer
+    within its SKU, cheapest unit_price first, with the deterministic
+    supplier_id tiebreak — the reference's ORDER BY unit_price alone is
+    nondeterministic on real price ties (SURVEY §2.5; e.g. sku 1 @45.00
+    from suppliers 1/18/30, init.sql:174,:229,:264)."""
+    w = Window.partitionBy("sku_id").orderBy(F.asc("unit_price"), F.asc("supplier_id"))
+    return F.row_number().over(w)
+
+
 def ranked_suppliers(supplier_products: DataFrame, suppliers: DataFrame) -> DataFrame:
     """Q3 CTE (reference pipeline.py:654-662): active offers ranked by
-    unit_price per SKU.  ROW_NUMBER with the deterministic supplier_id
-    tiebreak — the reference's ORDER BY unit_price alone is nondeterministic
-    on real price ties (SURVEY §2.5; e.g. sku 1 @45.00 from suppliers
-    1/18/30, init.sql:174,:229,:264)."""
+    unit_price per SKU."""
     sp = supplier_products.filter(F.col("is_active"))
     s = suppliers.filter(F.col("is_active")).select(
         F.col("supplier_id"), F.col("supplier_code"), F.col("name").alias("supplier_name")
     )
-    w = Window.partitionBy("sku_id").orderBy(F.asc("unit_price"), F.asc("supplier_id"))
-    return (
-        sp.join(F.broadcast(s), "supplier_id")
-        .withColumn("price_rank", F.row_number().over(w))
-    )
+    return sp.join(F.broadcast(s), "supplier_id").withColumn("price_rank", price_rank())
 
 
 def supplier_orders(
@@ -273,15 +279,16 @@ def run_pipeline(
     of raw orders.  ``release()`` in the returned dict unpersists them.
     Callers wanting byte-layout outputs use sources.sinks on the frames.
     """
-    agg_full = aggregate_orders(orders, products, warehouses, full=True)
-    agg_slim = aggregate_orders(orders, products, warehouses, full=False)
+    agg_full = aggregate_orders(orders, products, warehouses)
     ssc = safety_stock_combined(safety_stock, warehouses, ss_by_warehouse)
     inv = inventory_for_date(snapshots, run_date)
-    nd_full = net_demand(agg_slim, ssc, inv, run_date, full=True)
+    nd_full = net_demand(agg_full, ssc, inv, run_date)
     persisted: list[DataFrame] = []
     if reuse_stages:
-        # agg_full feeds one count + the returned frame; nd_full feeds three
-        # summary actions + supplier_orders; so feeds two actions + return.
+        # agg_full feeds net_demand + one count + the returned frame (it is
+        # persisted first, so nd_full's cached plan reads it); nd_full feeds
+        # three summary actions + supplier_orders; so feeds two actions +
+        # return.
         agg_full, nd_full = agg_full.persist(), nd_full.persist()
         persisted += [agg_full, nd_full]
     rs = ranked_suppliers(supplier_products, suppliers)

@@ -233,8 +233,8 @@ def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate: hour AND day grains from ONE
     fact scan and one exchange via GROUPING SETS (Expand emits each row
     once per grain; map-side partial aggs collapse before the shuffle).
-    At 100 TB this replaces two full scans with one — the same economics as
-    demand_inventory_offers (queries/procurement.py) applied to time grains.
+    At 100 TB this replaces two full scans with one — the LMFAO shared-
+    aggregate idea (Layered Aggregate Engine, SIGMOD 2019) on time grains.
     grouping_id() labels the grain; exact-cents sums keep hashes stable."""
     ev = load_table(spark, sf_dir, "events")
     cents = P.spark_cents(F.col("value"))

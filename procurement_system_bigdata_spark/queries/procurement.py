@@ -33,9 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..operators.pipeline import net_demand_measures, price_rank, safety_stock_combined
 from ..operators.ranking import with_global_sequence
 
 # Deterministic date split: demand = shipped before, inventory = on/after.
@@ -87,7 +87,7 @@ def _dim_attrs(part: DataFrame, nat: DataFrame):
 
 
 def aggregated_orders_stage(
-    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame, full: bool
+    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame
 ) -> DataFrame:
     """Reference Q1 CTE ``aggregated_orders`` (pipeline.py:408-426).
 
@@ -98,31 +98,27 @@ def aggregated_orders_stage(
     reference's 8-key GROUP BY because all attributes are functionally
     dependent on the ids; verified hash-identical against the oracle, which
     keeps the reference's original wide-key shape.
-    ``full=False`` is the re-computed CTE shape used inside Q2/Q3
-    (pipeline.py:496-505).
     """
     demand = li.filter(F.col("l_shipdate") < F.lit(SNAPSHOT_SPLIT).cast("timestamp"))
     smap = supp.select("s_suppkey", "s_nationkey")
     joined = demand.join(F.broadcast(smap), demand.l_suppkey == smap.s_suppkey)
-    aggs = [F.sum(F.col("l_quantity").cast("long")).alias("total_quantity")]
-    if full:
-        aggs += [
-            F.count(F.lit(1)).alias("order_count"),
-            F.max(F.col("l_shipdate").cast("date")).alias("last_order_date"),
-        ]
     agg = joined.groupBy(
         F.col("l_partkey").cast("long").alias("sku_id"),
         F.col("s_nationkey").cast("long").alias("warehouse_id"),
-    ).agg(*aggs)
+    ).agg(
+        F.sum(F.col("l_quantity").cast("long")).alias("total_quantity"),
+        F.count(F.lit(1)).alias("order_count"),
+        F.max(F.col("l_shipdate").cast("date")).alias("last_order_date"),
+    )
     pdim, ndim = _dim_attrs(part, nat)
-    cols = [
-        "sku_id", "sku_code", "product_name", "category",
-        "warehouse_id", "warehouse_code", "warehouse_name", "total_quantity",
-    ] + (["order_count", "last_order_date"] if full else [])
     return (
         agg.join(F.broadcast(pdim), "sku_id")
         .join(F.broadcast(ndim), "warehouse_id")
-        .select(*cols)
+        .select(
+            "sku_id", "sku_code", "product_name", "category",
+            "warehouse_id", "warehouse_code", "warehouse_name",
+            "total_quantity", "order_count", "last_order_date",
+        )
     )
 
 
@@ -174,23 +170,7 @@ def safety_stock_stage(part: DataFrame, nat: DataFrame) -> DataFrame:
             (F.col("p_size") * 5 + F.col("n_nationkey")).cast("long").alias("safety_stock_qty"),
         )
     )
-    dense = ss.crossJoin(F.broadcast(wh))
-    return (
-        dense.alias("ss")
-        .join(
-            F.broadcast(ssw).alias("ssw"),
-            (F.col("ss.sku_id") == F.col("ssw.sku_id"))
-            & (F.col("ss.warehouse_id") == F.col("ssw.warehouse_id")),
-            "left",
-        )
-        .select(
-            F.coalesce(F.col("ssw.sku_id"), F.col("ss.sku_id")).alias("sku_id"),
-            F.coalesce(F.col("ssw.warehouse_id"), F.col("ss.warehouse_id")).alias("warehouse_id"),
-            F.coalesce(
-                F.col("ssw.safety_stock_qty"), F.col("ss.safety_stock_qty"), F.lit(0)
-            ).alias("safety_stock_qty"),
-        )
-    )
+    return safety_stock_combined(ss, wh, ssw)
 
 
 SAFETY_STOCK_CTE_SQL = """
@@ -214,42 +194,8 @@ SAFETY_STOCK_CTE_SQL = """
 """
 
 
-def inventory_stage(li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame) -> DataFrame:
-    """Reference Q2 CTE ``inventory_data`` (pipeline.py:516-519).
-
-    Date-predicate scan of the snapshot store (Cassandra clustering-key read
-    in the reference; here a pushed-down parquet filter), keyed by string
-    codes — the reference joins inventory on (sku_code, warehouse_code)
-    rather than ids (operator J6, pipeline.py:535).
-    available = total shipped qty, reserved = returned ('R') qty.
-    """
-    snap = li.filter(F.col("l_shipdate") >= F.lit(SNAPSHOT_SPLIT).cast("timestamp"))
-    smap = supp.select("s_suppkey", "s_nationkey")
-    agg = (
-        snap.join(F.broadcast(smap), snap.l_suppkey == smap.s_suppkey)
-        .groupBy(
-            F.col("l_partkey").cast("long").alias("sku_id"),
-            F.col("s_nationkey").cast("long").alias("warehouse_id"),
-        )
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).alias("available_qty"),
-            F.sum(
-                F.when(
-                    F.col("l_returnflag") == "R", F.col("l_quantity").cast("long")
-                ).otherwise(F.lit(0))
-            ).alias("reserved_qty"),
-        )
-    )
-    # attach the string codes post-agg: the reference's inventory relation is
-    # keyed by codes (J6), so the join downstream stays a string-key join
-    pdim, ndim = _dim_attrs(part, nat)
-    return (
-        agg.join(F.broadcast(pdim.select("sku_id", "sku_code")), "sku_id")
-        .join(F.broadcast(ndim.select("warehouse_id", "warehouse_code")), "warehouse_id")
-        .select("sku_code", "warehouse_code", "available_qty", "reserved_qty")
-    )
-
-
+# Reference Q2 CTE ``inventory_data`` (pipeline.py:516-519), for the oracles
+# only: net_demand_fused reads these measures off its one fact aggregate.
 INVENTORY_CTE_SQL = f"""
     SELECT
         l.p_name || '#' || CAST(l.p_partkey AS VARCHAR) AS sku_code,
@@ -268,53 +214,6 @@ INVENTORY_CTE_SQL = f"""
 """
 
 
-def net_demand_stage(
-    ao: DataFrame, ssc: DataFrame, inv: DataFrame, full: bool
-) -> DataFrame:
-    """Reference Q2 final SELECT (pipeline.py:521-536).
-
-    Two left joins (id keys then code keys), COALESCE-to-0 on outer-join
-    miss, GREATEST clamp at 0 (operators J5 J6 P4 P5 P7).  ``full=False`` is
-    the slimmer net_demand_calc CTE reused by Q3 (pipeline.py:641-653).
-    """
-    ssc = ssc.withColumnRenamed("safety_stock_qty", "ss_qty")
-    joined = (
-        ao.alias("ao")
-        .join(ssc.alias("ss"), ["sku_id", "warehouse_id"], "left")
-        .join(inv.alias("inv"), ["sku_code", "warehouse_code"], "left")
-    )
-    avail = F.coalesce(F.col("available_qty"), F.lit(0))
-    resv = F.coalesce(F.col("reserved_qty"), F.lit(0))
-    net = F.greatest(
-        F.lit(0).cast("long"),
-        (
-            F.col("total_quantity")
-            + F.coalesce(F.col("ss_qty"), F.lit(0))
-            - (avail - resv)
-        ).cast("long"),
-    )
-    dims = [
-        F.col("ao.sku_id").alias("sku_id"),
-        F.col("ao.sku_code").alias("sku_code"),
-        F.col("ao.product_name").alias("product_name"),
-        F.col("ao.category").alias("category"),
-        F.col("ao.warehouse_id").alias("warehouse_id"),
-        F.col("ao.warehouse_code").alias("warehouse_code"),
-        F.col("ao.warehouse_name").alias("warehouse_name"),
-    ]
-    if full:
-        return joined.select(
-            *dims,
-            F.col("total_quantity").alias("aggregated_orders"),
-            F.coalesce(F.col("ss_qty"), F.lit(0)).cast("long").alias("safety_stock"),
-            avail.cast("long").alias("available_stock"),
-            resv.cast("long").alias("reserved_stock"),
-            (avail - resv).cast("long").alias("effective_stock"),
-            net.alias("net_demand"),
-        )
-    return joined.select(*dims, net.alias("net_demand"))
-
-
 # ---------------------------------------------------------------------------
 # Driver-facing queries
 # ---------------------------------------------------------------------------
@@ -323,7 +222,7 @@ def net_demand_stage(
 def q_aggregate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1: aggregate demand per (sku, warehouse) — reference pipeline.py:408-426."""
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    return aggregated_orders_stage(li, part, supp, nat, full=True).orderBy(
+    return aggregated_orders_stage(li, part, supp, nat).orderBy(
         F.desc("total_quantity"), "sku_id", "warehouse_id"
     )
 
@@ -352,39 +251,31 @@ Q_AGGREGATE_ORDERS_SQL = f"""
 """
 
 
-def combined_demand_inventory(
+def net_demand_fused(
     li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """One lineitem scan serving both the demand CTE and the inventory CTE.
+) -> DataFrame:
+    """Net demand from ONE fact scan and ONE left join.
 
-    Both aggregate the same fact on (partkey, nationkey) with complementary
-    date filters, so a single conditional aggregation covers them; deriving
-    the two relations from the SAME aggregate subtree lets Spark reuse the
-    exchange (visible as ReusedExchange in the plan) instead of scanning and
-    shuffling lineitem twice.  Row membership matches the separate stages
-    exactly: demand rows need >=1 pre-split line, inventory rows >=1
-    post-split line.
-
-    The aggregate is deliberately NOT persisted: the two branches specialize
-    the subtree (different filters/prunes), so caching would pin one scan —
-    but MEASURED at sf0.1 (local[32], 3 runs) the no-cache recompute is
-    FASTER (net_demand 2.0-2.4s vs 2.8-3.1s with persist): materializing the
-    dim-product-bounded aggregate into the block store costs more than the
-    second columnar scan, and an unreleased .persist() leaks cache entries
-    across driver invocations (CacheManager entries are never GC'd).
-    The headline queries avoid even the double scan via ``net_demand_fused``.
+    The reference's CTE shape aggregates the demand and inventory relations
+    separately, then LEFT JOINs them back on (sku_code, warehouse_code)
+    (J6).  Both relations derive 1:1 from the SAME (sku_id, warehouse_id)
+    conditional aggregate — sku_code and warehouse_code are injective
+    functions of the id keys — so the rejoin is algebraically redundant:
+    filtering the combined aggregate to demand rows and reading the
+    snapshot measures off the same row produces the identical relation
+    (COALESCE-on-miss == the conditional sums' 0 defaults; membership:
+    inventory-only rows are dropped by the left join anyway).  The plan is
+    one scan, broadcast dim attaches, and a single aggregate⋈aggregate left
+    join against the safety-stock grid (shuffle join by design: both sides
+    are |sku|x|warehouse|-bounded, too big to broadcast at 100 TB; AQE
+    downgrades to broadcast when small).  The oracle keeps the reference's
+    staged CTE shape (Q_NET_DEMAND_SQL), so every hash match checks the
+    equivalence.
     """
-    return _ao_inv_from_combined(_combined_agg(li, supp), part, nat)
-
-
-def _combined_agg(li: DataFrame, supp: DataFrame) -> DataFrame:
-    """The shared conditional (sku_id, warehouse_id) aggregate: demand-side
-    and snapshot-side measures from ONE lineitem scan."""
-    split = F.lit(SNAPSHOT_SPLIT).cast("timestamp")
-    smap = supp.select("s_suppkey", "s_nationkey")
-    is_demand = F.col("l_shipdate") < split
+    is_demand = F.col("l_shipdate") < F.lit(SNAPSHOT_SPLIT).cast("timestamp")
     qty = F.col("l_quantity").cast("long")
-    return (
+    smap = supp.select("s_suppkey", "s_nationkey")
+    demand = (
         li.join(F.broadcast(smap), li.l_suppkey == smap.s_suppkey)
         .groupBy(
             F.col("l_partkey").cast("long").alias("sku_id"),
@@ -394,191 +285,26 @@ def _combined_agg(li: DataFrame, supp: DataFrame) -> DataFrame:
             F.sum(F.when(is_demand, qty).otherwise(F.lit(0))).alias("_demand_qty"),
             F.count(F.when(is_demand, F.lit(1))).alias("_demand_cnt"),
             F.sum(F.when(~is_demand, qty).otherwise(F.lit(0))).alias("_avail"),
-            F.count(F.when(~is_demand, F.lit(1))).alias("_snap_cnt"),
             F.sum(
-                F.when(~is_demand & (F.col("l_returnflag") == "R"), qty).otherwise(
-                    F.lit(0)
-                )
+                F.when(~is_demand & (F.col("l_returnflag") == "R"), qty).otherwise(F.lit(0))
             ).alias("_resv"),
         )
+        .filter(F.col("_demand_cnt") > 0)
     )
-
-
-def net_demand_fused(
-    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame, full: bool
-) -> DataFrame:
-    """Net demand from ONE fact scan and ONE left join — the headline-query
-    derivation.
-
-    ``net_demand_stage`` models the reference's CTE shape: aggregate the
-    demand and inventory relations separately, then LEFT JOIN them back on
-    (sku_code, warehouse_code) (J6).  But both relations derive 1:1 from the
-    SAME (sku_id, warehouse_id) conditional aggregate — sku_code and
-    warehouse_code are injective functions of the id keys — so the rejoin is
-    algebraically redundant: filtering the combined aggregate to demand rows
-    and reading the snapshot measures off the same row produces the
-    identical relation (COALESCE-on-miss == the conditional sums' 0
-    defaults; membership: inventory-only rows are dropped by the left join
-    anyway).  This removes the J6 code-key shuffle+sort pair AND the
-    second fact scan — the plan is one scan, broadcast dim attaches, and a
-    single aggregate⋈aggregate left join against the safety-stock grid
-    (shuffle join by design: both sides are |sku|x|warehouse|-bounded, too
-    big to broadcast at 100 TB; AQE downgrades to broadcast when small).
-    Oracle-hash-identical to the staged derivation (CORRECTNESS net_demand /
-    supplier_orders); J5/J6 operator parity lives on in net_demand_stage,
-    exercised by the reference-shaped pipeline (operators/pipeline.py).
-    """
-    demand = _combined_agg(li, supp).filter(F.col("_demand_cnt") > 0)
-    return _net_demand_from_combined(demand, part, nat, full)
-
-
-def _net_demand_from_combined(
-    demand: DataFrame, part: DataFrame, nat: DataFrame, full: bool
-) -> DataFrame:
-    """The fused tail: attach dims + safety-stock grid to the filtered
-    conditional aggregate (shared by the single-scan and grouping-sets
-    derivations)."""
     pdim, ndim = _dim_attrs(part, nat)
-    ssc = safety_stock_stage(part, nat).withColumnRenamed(
-        "safety_stock_qty", "ss_qty"
-    )
-    joined = (
+    ssc = safety_stock_stage(part, nat).withColumnRenamed("safety_stock_qty", "ss_qty")
+    return (
         demand.join(F.broadcast(pdim), "sku_id")
         .join(F.broadcast(ndim), "warehouse_id")
         .join(ssc, ["sku_id", "warehouse_id"], "left")
-    )
-    avail = F.col("_avail")
-    resv = F.col("_resv")
-    net = F.greatest(
-        F.lit(0).cast("long"),
-        (
-            F.col("_demand_qty")
-            + F.coalesce(F.col("ss_qty"), F.lit(0))
-            - (avail - resv)
-        ).cast("long"),
-    )
-    dims = [
-        "sku_id", "sku_code", "product_name", "category",
-        "warehouse_id", "warehouse_code", "warehouse_name",
-    ]
-    if full:
-        return joined.select(
-            *dims,
-            F.col("_demand_qty").alias("aggregated_orders"),
-            F.coalesce(F.col("ss_qty"), F.lit(0)).cast("long").alias("safety_stock"),
-            avail.cast("long").alias("available_stock"),
-            resv.cast("long").alias("reserved_stock"),
-            (avail - resv).cast("long").alias("effective_stock"),
-            net.alias("net_demand"),
-        )
-    return joined.select(*dims, net.alias("net_demand"))
-
-
-def _ao_inv_from_combined(
-    combined: DataFrame, part: DataFrame, nat: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Split the conditional (sku, warehouse) aggregate into the demand and
-    inventory relations (membership = >=1 matching fact line on each side)."""
-    pdim, ndim = _dim_attrs(part, nat)
-    ao = (
-        combined.filter(F.col("_demand_cnt") > 0)
-        .join(F.broadcast(pdim), "sku_id")
-        .join(F.broadcast(ndim), "warehouse_id")
         .select(
             "sku_id", "sku_code", "product_name", "category",
             "warehouse_id", "warehouse_code", "warehouse_name",
-            F.col("_demand_qty").alias("total_quantity"),
+            *net_demand_measures(
+                F.col("_demand_qty"), F.col("ss_qty"), F.col("_avail"), F.col("_resv")
+            ),
         )
     )
-    inv = (
-        combined.filter(F.col("_snap_cnt") > 0)
-        .join(F.broadcast(pdim.select("sku_id", "sku_code")), "sku_id")
-        .join(F.broadcast(ndim.select("warehouse_id", "warehouse_code")), "warehouse_id")
-        .select(
-            "sku_code", "warehouse_code",
-            F.col("_avail").alias("available_qty"),
-            F.col("_resv").alias("reserved_qty"),
-        )
-    )
-    return ao, inv
-
-
-def demand_inventory_offers(
-    li: DataFrame, part: DataFrame, supp: DataFrame, nat: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One lineitem scan serving ALL THREE of Q3's fact aggregations.
-
-    supplier_orders needs the demand and inventory aggregates (grouped on
-    (sku, warehouse)) plus the supplier-offer price aggregate (grouped on
-    (supplier, sku)).  GROUPING SETS computes both groupings in one scan and
-    one exchange: Expand emits each fact row once per set, the map-side
-    partial aggregate collapses each set to its dim-product-bounded group
-    count, so at 100 TB the shuffle carries |sku x warehouse| +
-    |supplier x sku| partial rows instead of re-scanning and re-shuffling
-    the fact table per aggregation.  Aggregate values are identical to the
-    separate-stage derivation (same input rows, same expression trees), so
-    oracle hashes are unchanged.
-
-    MEASURED (sf0.1, local[32], interleaved): with the fused net-demand tail
-    the two shapes are within run noise of each other (~1.9s single-scan vs
-    ~1.7-2.2s two-scan enriched core; pre-fusion the Expand overhead lost
-    3.75s vs 2.91s).  ``q_supplier_orders`` keeps the two-scan derivation
-    for the simpler plan; ``supplier_orders_enriched(single_scan=True)`` is
-    the shape to prefer when the fact scan dominates (wide rows, remote
-    object storage, no column pruning) — the tradeoff moves with scan cost,
-    not data size.
-    """
-    gsets = _gsets_agg(li, supp)
-    ao, inv = _ao_inv_from_combined(gsets.filter(F.col("_gid") == 1), part, nat)
-    offers = gsets.filter(F.col("_gid") == 2).select(
-        "supplier_id", "sku_id", "unit_price"
-    )
-    return ao, inv, offers
-
-
-def _gsets_agg(li: DataFrame, supp: DataFrame) -> DataFrame:
-    """The GROUPING SETS conditional aggregate feeding both Q3 groupings
-    ((sku, warehouse) -> _gid=1, (supplier, sku) -> _gid=2) from one scan."""
-    split = F.lit(SNAPSHOT_SPLIT).cast("timestamp")
-    smap = supp.select("s_suppkey", "s_nationkey")
-    is_demand = F.col("l_shipdate") < split
-    qty = F.col("l_quantity").cast("long")
-    base = li.join(F.broadcast(smap), li.l_suppkey == smap.s_suppkey).select(
-        F.col("l_partkey").cast("long").alias("sku_id"),
-        F.col("s_nationkey").cast("long").alias("warehouse_id"),
-        F.col("l_suppkey").cast("long").alias("supplier_id"),
-        is_demand.alias("_is_demand"),
-        qty.alias("_qty"),
-        (F.col("l_extendedprice") / F.col("l_quantity")).alias("_unit_price"),
-        (F.col("l_returnflag") == "R").alias("_is_return"),
-    )
-    gsets = (
-        base.groupingSets(
-            [["sku_id", "warehouse_id"], ["supplier_id", "sku_id"]],
-            "sku_id", "warehouse_id", "supplier_id",
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("_is_demand"), F.col("_qty")).otherwise(F.lit(0))
-            ).alias("_demand_qty"),
-            F.count(F.when(F.col("_is_demand"), F.lit(1))).alias("_demand_cnt"),
-            F.sum(
-                F.when(~F.col("_is_demand"), F.col("_qty")).otherwise(F.lit(0))
-            ).alias("_avail"),
-            F.count(F.when(~F.col("_is_demand"), F.lit(1))).alias("_snap_cnt"),
-            F.sum(
-                F.when(
-                    ~F.col("_is_demand") & F.col("_is_return"), F.col("_qty")
-                ).otherwise(F.lit(0))
-            ).alias("_resv"),
-            F.min("_unit_price").alias("unit_price"),
-            # grouping_id bit per grouping column (sku_id, warehouse_id,
-            # supplier_id), 1 = aggregated away: (sku, warehouse) -> 0b001,
-            # (supplier, sku) -> 0b010
-            F.grouping_id().alias("_gid"),
-        )
-    )
-    return gsets
 
 
 def q_net_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,7 +312,7 @@ def q_net_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference pipeline.py:495-537 (CTEs C1, joins J3-J6, COALESCE/GREATEST).
     Runs the fused single-scan derivation (see net_demand_fused)."""
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    return net_demand_fused(li, part, supp, nat, full=True).orderBy(
+    return net_demand_fused(li, part, supp, nat).orderBy(
         F.desc("net_demand"), "sku_id", "warehouse_id"
     )
 
@@ -628,21 +354,10 @@ def ranked_suppliers_stage(
     (P10, pipeline.py:661) maps to s_acctbal > 0.  ROW_NUMBER ranks cheapest
     per part with the deterministic supplier_id tiebreak (W1 + SURVEY §2.5).
     """
-    offers = (
-        li.groupBy(
-            F.col("l_suppkey").cast("long").alias("supplier_id"),
-            F.col("l_partkey").cast("long").alias("sku_id"),
-        )
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"))
-    )
-    return ranked_suppliers_from_offers(offers, part, supp)
-
-
-def ranked_suppliers_from_offers(
-    offers: DataFrame, part: DataFrame, supp: DataFrame
-) -> DataFrame:
-    """Rank pre-aggregated (supplier, sku, unit_price) offers — the join/window
-    tail of ``ranked_suppliers_stage``, reusable with grouping-sets offers."""
+    offers = li.groupBy(
+        F.col("l_suppkey").cast("long").alias("supplier_id"),
+        F.col("l_partkey").cast("long").alias("sku_id"),
+    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"))
     dims = part.select(
         F.col("p_partkey").cast("long").alias("sku_id"),
         F.col("p_size").cast("int").alias("pack_size"),
@@ -653,13 +368,10 @@ def ranked_suppliers_from_offers(
         F.col("s_name").alias("supplier_name"),
         ((F.col("s_suppkey") % 10) + 1).cast("int").alias("lead_time_days"),
     )
-    rank_w = Window.partitionBy("sku_id").orderBy(
-        F.asc("unit_price"), F.asc("supplier_id")
-    )
     return (
         offers.join(F.broadcast(sdim), "supplier_id")
         .join(F.broadcast(dims), "sku_id")
-        .withColumn("price_rank", F.row_number().over(rank_w))
+        .withColumn("price_rank", price_rank())
     )
 
 
@@ -711,34 +423,15 @@ def q_supplier_orders(
     )
 
 
-def supplier_orders_enriched(
-    spark: SparkSession, sf_dir: str, single_scan: bool = False
-) -> DataFrame:
+def supplier_orders_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 up to (but excluding) PO numbering — split out so plan tests can
-    inspect the full join/aggregate plan (the lazy localCheckpoint in the
-    numbering tail truncates the visible lineage).
-
-    ``single_scan=True`` derives BOTH the net-demand aggregate and the
-    supplier-offer aggregate from one GROUPING SETS scan (value-identical
-    per tests/test_plan_quality.py); default is the two-scan shape —
-    measured comparable at sf0.1 with the fused tail, and simpler plans.
+    inspect the full join/aggregate plan (the numbering tail's localCheckpoint,
+    when it runs, truncates the visible lineage).  Two fact scans: the fused
+    net-demand aggregate and the supplier-offer aggregate.
     """
     li, part, supp, nat = _facts_dims(spark, sf_dir)
-    if single_scan:
-        gsets = _gsets_agg(li, supp)
-        demand = gsets.filter(
-            (F.col("_gid") == 1) & (F.col("_demand_cnt") > 0)
-        )
-        nd = _net_demand_from_combined(demand, part, nat, full=False)
-        offers = gsets.filter(F.col("_gid") == 2).select(
-            "supplier_id", "sku_id", "unit_price"
-        )
-        rs = ranked_suppliers_from_offers(offers, part, supp).filter(
-            F.col("price_rank") == 1
-        )
-    else:
-        nd = net_demand_fused(li, part, supp, nat, full=False)
-        rs = ranked_suppliers_stage(li, part, supp).filter(F.col("price_rank") == 1)
+    nd = net_demand_fused(li, part, supp, nat)
+    rs = ranked_suppliers_stage(li, part, supp).filter(F.col("price_rank") == 1)
 
     joined = nd.filter(F.col("net_demand") > 0).join(rs, "sku_id")
     order_qty = F.greatest(

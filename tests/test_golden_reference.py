@@ -14,8 +14,7 @@ import pytest
 
 from procurement_system_bigdata_spark.operators import pipeline as pl
 from procurement_system_bigdata_spark.sources import readers
-
-from sql_fixtures import master_data_frames
+from procurement_system_bigdata_spark.sources.master_sql import master_data_frames
 
 REF = Path("/root/reference/data")
 RUN_DATE = date(2026, 1, 14)

@@ -159,6 +159,82 @@ def test_pipeline_invariants(spark, tiny_master, orders, snaps):
         assert abs(r["total_cost"] - r["order_quantity"] * float(r["unit_price"])) < 1e-6
 
 
+def test_daily_pipeline_matches_python_and_stage_reuse(spark, tiny_master):
+    """run_pipeline on fixed inputs: the recompute-everything run
+    (reuse_stages=False) and the persisted-stage run agree on every frame
+    and summary metric, and every net_demand row equals the Q2 arithmetic
+    done in plain Python over the same inputs."""
+    run_date = date(2026, 2, 1)
+    day_before = date(2026, 1, 31)
+    # (sku, warehouse, quantity); (1, 1) and (5, 2) take two order lines
+    orders = [(1, 1, 30), (1, 1, 12), (2, 2, 50), (3, 1, 7), (4, 3, 100),
+              (5, 2, 1), (5, 2, 2)]
+    snaps = [
+        (1, 1, run_date, 100, 10),    # effective stock 90 > demand + safety
+        (3, 1, run_date, 20, 5),
+        (4, 3, run_date, 50, 0),
+        (6, 1, run_date, 70, 0),      # stock without demand: no output row
+        (2, 2, day_before, 500, 0),   # other day: (2, 2) has no snapshot
+    ]                                 # (5, 2) has no snapshot row at all
+    odf = spark.createDataFrame(
+        [(f"ORD-{i:05d}", 1, sku, qty, wh, run_date.isoformat())
+         for i, (sku, wh, qty) in enumerate(orders)],
+        schemas.ORDERS_TYPED,
+    )
+    sdf = spark.createDataFrame(
+        [(f"PROD00{sku}", d, f"WH00{wh}", av, rv) for sku, wh, d, av, rv in snaps],
+        schemas.INVENTORY_SNAPSHOTS,
+    )
+    keys = ("aggregated_orders", "net_demand", "supplier_orders")
+    cold = pl.run_pipeline(orders=odf, snapshots=sdf, run_date=run_date,
+                           reuse_stages=False, **tiny_master)
+    # pin the cold results before the warm run caches the same plans
+    cold_rows = {k: cold[k].collect() for k in keys}
+    warm = pl.run_pipeline(orders=odf, snapshots=sdf, run_date=run_date, **tiny_master)
+    try:
+        assert warm["summary"] == cold["summary"]
+        assert warm["failed_stages"] == cold["failed_stages"] == []
+        for k in keys:
+            a = spark.createDataFrame(cold_rows[k], cold[k].schema)
+            b = warm[k]
+            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, k
+    finally:
+        warm["release"]()
+
+    m = {k: v.collect() for k, v in tiny_master.items()}
+    product = {r.sku_id: r for r in m["products"]}
+    warehouse = {r.warehouse_id: r for r in m["warehouses"]}
+    ss_global = {r.sku_id: r.safety_stock_qty for r in m["safety_stock"]}
+    ss_override = {(r.sku_id, r.warehouse_id): r.safety_stock_qty
+                   for r in m["ss_by_warehouse"]}
+    stock = {(sku, wh): (av, rv) for sku, wh, d, av, rv in snaps if d == run_date}
+    totals: dict = {}
+    for sku, wh, qty in orders:
+        totals[(sku, wh)] = totals.get((sku, wh), 0) + qty
+    expected = {}
+    for (sku, wh), total in totals.items():
+        safety = ss_override.get((sku, wh), ss_global[sku])
+        avail, resv = stock.get((sku, wh), (0, 0))
+        expected[(sku, wh)] = dict(
+            sku_id=sku, sku_code=product[sku].sku_code,
+            product_name=product[sku].name, category=product[sku].category,
+            warehouse_id=wh, warehouse_code=warehouse[wh].warehouse_code,
+            warehouse_name=warehouse[wh].name, city=warehouse[wh].city,
+            aggregated_orders=total, safety_stock=safety,
+            available_stock=avail, reserved_stock=resv,
+            effective_stock=avail - resv,
+            net_demand=max(0, total + safety - (avail - resv)),
+            calculation_date="01-02-2026",
+        )
+    got = {(r.sku_id, r.warehouse_id): r.asDict() for r in cold_rows["net_demand"]}
+    assert got == expected
+    assert expected[(1, 1)]["net_demand"] == 0 and expected[(5, 2)]["available_stock"] == 0
+    assert cold["summary"]["total_net_demand"] == sum(e["net_demand"] for e in expected.values())
+    assert {(r.sku_id, r.warehouse_id) for r in cold_rows["supplier_orders"]} == {
+        k for k, e in expected.items() if e["net_demand"] > 0
+    }
+
+
 def test_approx_quantiles_within_rank_error(spark, duck):
     """GK-sketch guarantee: each approximate quantile must sit within the
     exact value window [q - eps, q + eps] with eps = 1/accuracy rank error
