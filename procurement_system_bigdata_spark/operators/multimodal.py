@@ -1,24 +1,38 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images / audio / video ride through the engine as ``binary`` columns with a
-typed metadata struct; decode / resize / frame-sample are Arrow-batched
-``mapInPandas`` stages.  P6 PPM, 24-bit BMP, WAV (PCM + G.711
-mu-law/A-law + IMA ADPCM since round 10), PNG (stdlib zlib +
-all five scanline filters, both interlace methods — Adam7 since round 9)
-and JPEG (numpy DCT + Huffman; 4:4:4, grayscale, round-9 4:2:0/4:2:2
-chroma-subsampled, and — round 10 — progressive SOF2 with spectral
-selection + successive approximation) all decode FOR REAL via the
-dependency-free codecs in ``operators/codecs.py``; MP4 containers parse
-for real too (from-spec ISO/IEC 14496-12 box + sample-table layer, with
-MJPEG tracks fully decoded through the JPEG path).  What still raises
+typed metadata struct.  P6 PPM, 24-bit BMP, WAV (PCM + G.711
+mu-law/A-law + IMA ADPCM), PNG (stdlib zlib, all five scanline filters,
+Adam7 interlace) and JPEG (numpy DCT + Huffman; 4:4:4, grayscale, 4:2:0 /
+4:2:2, progressive SOF2, lossless SOF3, restart markers) all decode FOR
+REAL via the dependency-free codecs in ``operators/codecs.py``; MP4
+containers parse for real too (from-spec ISO/IEC 14496-12 box + sample
+table, MJPEG tracks decoded through the JPEG path).  What still raises
 ``UnsupportedMediaError`` at the documented PIL/ffmpeg swap seam is the
-truly external tail — arithmetic-coded/hierarchical JPEG, inter-frame
-video codecs (H.264/HEVC inside MP4), and perceptual audio (MP3/AAC).
+truly external tail: arithmetic-coded/hierarchical JPEG, inter-frame video
+codecs (H.264/HEVC inside MP4) and perceptual audio (MP3/AAC).
+
+Two executor-side loops cross the DataFrame/Python boundary, one per
+direction.  ``_attach_encoded`` births payloads from ids (encode side);
+``_map_payloads`` runs every decode / resize / sample stage (decode side).
+Its contract, which every stage below inherits:
+
+- **Tuples:** per payload, ``rows(media_id, content)`` returns an iterable
+  of tuples in the output schema's field order: zero, one or many.
+- **Dead letters:** a payload whose codec raises ``UnsupportedMediaError``
+  (unsupported format OR corrupt/truncated payload) is dropped; tuples a
+  generator yielded before it raised are kept, so a clip keeps the frames
+  sampled before a corrupt one.  Any other exception fails the task.
+- **Pickling:** ``rows`` and ``encode`` run on executor Python workers,
+  which cannot import this package (the driver contract imports it via a
+  bare ``sys.path`` insert); they may call only ``codecs`` (registered by
+  value below) and plain locals, never a module-level function of this
+  module.
 
 Scale: mapInPandas streams Arrow record batches through one Python worker
-per core — the transfer is columnar and zero-copy on the JVM side; payloads
-stay out of the driver.  Repartition by a content-hash bucket before heavy
-decode stages so stragglers (huge videos) spread evenly.
+per core; payloads stay out of the driver.  Repartition by a content-hash
+bucket before heavy decode stages so stragglers (huge videos) spread
+evenly.
 """
 
 from __future__ import annotations
@@ -44,12 +58,9 @@ from pyspark.sql.types import (
 
 from . import banding, codecs
 
-# The mapInPandas closures below call codecs functions on EXECUTOR python
-# workers.  The driver contract imports this package via a bare
-# sys.path.insert, which workers do not inherit — so codecs must travel
-# INSIDE the pickled closures (by value), not as an import-by-reference.
-# codecs is dependency-free pure python/numpy, exactly the safe case for
-# by-value registration.
+# codecs travels INSIDE the pickled executor closures (by value), not as an
+# import-by-reference (module docstring, "Pickling"); it is dependency-free
+# pure python/numpy, exactly the safe case for by-value registration.
 from pyspark.cloudpickle import register_pickle_by_value
 
 register_pickle_by_value(codecs)
@@ -73,13 +84,6 @@ FEATURE_SCHEMA = StructType(
         StructField("head_hex", StringType()),
     ]
 )
-
-
-def decode_image(content: bytes) -> np.ndarray:
-    """Decode an image payload to (h, w, 3) uint8 RGB — real pixels for
-    PPM/BMP (operators/codecs.py, numpy-only); JPEG/PNG raise
-    ``UnsupportedMediaError`` at the PIL swap seam."""
-    return codecs.decode_image(content)
 
 
 def attach_binary_payloads(docs: DataFrame) -> DataFrame:
@@ -150,7 +154,7 @@ FRAME_SCHEMA = StructType(
 
 
 def resize_media(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Arrow-batched 1:1 resize stage (mapInPandas, same row count out).
+    """Arrow-batched 1:1 resize stage (same row count out).
 
     Production body: decode_image -> Image.resize((w, h)) -> re-encode.  The
     codec-free stand-in emits a deterministic fixed-size payload (truncate /
@@ -158,20 +162,11 @@ def resize_media(media: DataFrame, width: int = 64, height: int = 64) -> DataFra
     are all real and assertable.  Payloads never visit the driver."""
     target = width * height
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = [bytes(b[:target]).ljust(target, b"\0") for b in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "content": resized,
-                    "n_bytes": [len(b) for b in resized],
-                }
-            )
+    def rows(mid, b):
+        c = bytes(b[:target]).ljust(target, b"\0")
+        return [(mid, width, height, c, len(c))]
 
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return _map_payloads(media, RESIZED_SCHEMA, rows)
 
 
 IMAGE_SCHEMA = StructType(
@@ -198,21 +193,12 @@ AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-# re-exported for tests/backward-compat; defined in codecs so the pickled
-# executor closures carry them by value
-synthesize_image = codecs.synthesize_image
-synthesize_wav = codecs.synthesize_wav
-
-
 def _attach_encoded(docs: DataFrame, encode) -> DataFrame:
     """MEDIA_SCHEMA table of payloads born on the executors: one Arrow
     batch stage calls ``encode(media_id) -> (payload, media_type)`` per
     doc_id, so payloads never visit the driver.
 
-    ``encode`` runs on executor python workers, which do not have this
-    package importable (see the register_pickle_by_value note): it must
-    call only ``codecs`` functions and plain locals, never a module-level
-    function of this module.
+    ``encode`` obeys the executor pickling rule of ``_map_payloads``.
 
     The id frame is repartitioned to the session's parallelism: the
     testdata documents parquet is one small file -> 1-2 byte-sized scan
@@ -241,6 +227,35 @@ def _attach_encoded(docs: DataFrame, encode) -> DataFrame:
     return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
+def _map_payloads(media: DataFrame, schema: StructType, rows) -> DataFrame:
+    """The one decode-side Arrow loop: a mapInPandas over ``media`` that
+    emits, for each (media_id, content), the tuples of
+    ``rows(media_id, content)`` in ``schema`` field order (zero, one or
+    many per payload).
+
+    A payload whose codec raises ``codecs.UnsupportedMediaError`` is
+    dropped (the dead-letter rule); tuples a generator ``rows`` yielded
+    before it raised are kept, because ``list.extend`` keeps them.  Any
+    other exception fails the task.
+
+    ``rows`` runs on executor python workers, which cannot import this
+    package: it may call only ``codecs`` functions and plain locals, never
+    a module-level function of this module."""
+    cols = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for mid, b in zip(pdf["media_id"], pdf["content"]):
+                try:
+                    out.extend(rows(mid, b))
+                except codecs.UnsupportedMediaError:
+                    continue
+            yield pd.DataFrame(out, columns=cols)
+
+    return media.mapInPandas(batches, schema=schema)
+
+
 def attach_synthetic_media(docs: DataFrame, every_n_audio: int = 2) -> DataFrame:
     """Media table with REAL decodable payloads: WAV audio for every
     ``every_n_audio``-th id, PPM images otherwise."""
@@ -254,62 +269,35 @@ def attach_synthetic_media(docs: DataFrame, every_n_audio: int = 2) -> DataFrame
 
 
 def resize_images(media: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
-    """REAL image resize: decode PPM/BMP pixels, nearest-neighbor resample,
-    re-encode as P6 PPM (Arrow mapInPandas, 1:1).  Rows whose payload is not
-    a supported image (audio, compressed formats) are dropped — the
-    dead-letter pattern for codec gaps; count in/out to monitor.
-    """
+    """REAL image resize: decode PPM/BMP/PNG/JPEG pixels, nearest-neighbor
+    resample, re-encode as P6 PPM (1:1 over decodable rows; audio and
+    corrupt payloads are dead letters — count in/out to monitor)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, contents = [], []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    arr = codecs.decode_image(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                contents.append(codecs.encode_ppm(codecs.resize_nearest(arr, width, height)))
-                ids.append(mid)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "width": width,
-                    "height": height,
-                    "media_type": "image/x-portable-pixmap",
-                    "content": contents,
-                    "n_bytes": [len(c) for c in contents],
-                }
-            )
+    def rows(mid, b):
+        c = codecs.encode_ppm(codecs.resize_nearest(codecs.decode_image(b), width, height))
+        return [(mid, width, height, "image/x-portable-pixmap", c, len(c))]
 
-    return media.mapInPandas(batches, schema=IMAGE_SCHEMA)
+    return _map_payloads(media, IMAGE_SCHEMA, rows)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
-    """REAL audio feature extraction: decode PCM WAV samples and compute
-    rate/duration/RMS/peak/zero-crossings (Arrow mapInPandas, 1:1 over
-    decodable rows; non-audio rows dropped like resize_images)."""
+    """REAL audio feature extraction: decode WAV samples and compute
+    rate/duration/RMS/peak/zero-crossings (1:1 over decodable rows)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "sample_rate", "n_samples", "duration_sec",
-                "rms", "peak", "zero_crossings",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    x, rate = codecs.decode_wav(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(x))
-                rows["duration_sec"].append(len(x) / rate if rate else 0.0)
-                rows["rms"].append(float(np.sqrt(np.mean(x**2))) if len(x) else 0.0)
-                rows["peak"].append(float(np.max(np.abs(x))) if len(x) else 0.0)
-                rows["zero_crossings"].append(int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1]))))
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        x, rate = codecs.decode_wav(b)
+        n = len(x)
+        return [(
+            mid,
+            rate,
+            n,
+            n / rate if rate else 0.0,
+            float(np.sqrt(np.mean(x**2))) if n else 0.0,
+            float(np.max(np.abs(x))) if n else 0.0,
+            int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1]))),
+        )]
 
-    return media.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
+    return _map_payloads(media, AUDIO_FEATURE_SCHEMA, rows)
 
 
 AUDIO_AUDIT_SCHEMA = StructType(
@@ -335,9 +323,8 @@ AUDIO_ZC_TOL = 2
 
 
 def audio_features_audit(media: DataFrame) -> DataFrame:
-    """Bounded-oracle audit of the REAL audio decode+feature path (round-6
-    judge ask #5: graduate the last two rows-only queries to hash-checkable
-    oracles, same ``err_bound_checked`` pattern as packing/SemDeDup).
+    """Bounded-oracle audit of the REAL audio decode+feature path (same
+    ``err_bound_checked`` pattern as packing/SemDeDup).
 
     Exact columns (sample_rate / n_samples / duration_ms) come from the
     DECODED header, so DuckDB can predict them from the synthesis contract;
@@ -345,37 +332,27 @@ def audio_features_audit(media: DataFrame) -> DataFrame:
     against the closed forms of the pure-tone contract
     (codecs.TONE_* constants) and emitted as booleans the oracle pins TRUE.
     A broken decode, resample, or feature kernel flips a boolean ->
-    driver hash mismatch.  1:1 over decodable rows, non-audio rows dropped
-    (dead-letter convention shared with resize_images)."""
+    driver hash mismatch.  1:1 over decodable rows."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "sample_rate", "n_samples", "duration_ms",
-                "rms_ok", "peak_ok", "zc_ok",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    x, rate = codecs.decode_wav(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                n = len(x)
-                rms = float(np.sqrt(np.mean(x**2))) if n else 0.0
-                peak = float(np.max(np.abs(x))) if n else 0.0
-                zc = int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                freq = codecs.tone_freq(int(mid))
-                exp_rms = codecs.TONE_AMP / np.sqrt(2.0)
-                exp_zc = round(2.0 * freq * n / rate) if rate else 0
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(round(1000 * n / rate) if rate else 0)
-                rows["rms_ok"].append(abs(rms - exp_rms) < AUDIO_RMS_TOL)
-                rows["peak_ok"].append(AUDIO_PEAK_LO <= peak <= AUDIO_PEAK_HI)
-                rows["zc_ok"].append(abs(zc - exp_zc) <= AUDIO_ZC_TOL)
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        x, rate = codecs.decode_wav(b)
+        n = len(x)
+        rms = float(np.sqrt(np.mean(x**2))) if n else 0.0
+        peak = float(np.max(np.abs(x))) if n else 0.0
+        zc = int(np.sum(np.signbit(x[1:]) != np.signbit(x[:-1])))
+        exp_rms = codecs.TONE_AMP / np.sqrt(2.0)
+        exp_zc = round(2.0 * codecs.tone_freq(int(mid)) * n / rate) if rate else 0
+        return [(
+            mid,
+            rate,
+            n,
+            round(1000 * n / rate) if rate else 0,
+            abs(rms - exp_rms) < AUDIO_RMS_TOL,
+            AUDIO_PEAK_LO <= peak <= AUDIO_PEAK_HI,
+            abs(zc - exp_zc) <= AUDIO_ZC_TOL,
+        )]
 
-    return media.mapInPandas(batches, schema=AUDIO_AUDIT_SCHEMA)
+    return _map_payloads(media, AUDIO_AUDIT_SCHEMA, rows)
 
 
 def media_resize_sql(width: int = 16, height: int = 16, every_n_audio: int = 2) -> str:
@@ -774,38 +751,23 @@ def decode_images_audit(
     additionally bounds the JPEG reconstruction error against the
     closed-form gradient (exact-zero requirement for lossless rows;
     ``jpeg_tol`` widens for chroma-subsampled corpora, whose loss includes
-    the 2x2 downsample).  Undecodable rows are dropped (dead-letter
-    convention)."""
-    w, h, tol_jpeg = DECODE_WIDTH, DECODE_HEIGHT, jpeg_tol
+    the 2x2 downsample).  1:1 over decodable rows."""
+    w, h = DECODE_WIDTH, DECODE_HEIGHT
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "media_type", "width", "height", "pixel_md5",
-                "err_ok",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    arr = codecs.decode_image(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                kind = codecs.sniff_media_type(b)
-                ref = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
-                err = (
-                    float(np.abs(arr.astype(np.float64) - ref).mean())
-                    if arr.shape == ref.shape
-                    else float("inf")
-                )
-                tol = tol_jpeg if kind == "image/jpeg" else 0.0
-                rows["media_id"].append(mid)
-                rows["media_type"].append(kind)
-                rows["width"].append(arr.shape[1])
-                rows["height"].append(arr.shape[0])
-                rows["pixel_md5"].append(hashlib.md5(arr.tobytes()).hexdigest())
-                rows["err_ok"].append(err <= tol)
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        arr = codecs.decode_image(b)
+        kind = codecs.sniff_media_type(b)
+        ref = codecs.decode_ppm(codecs.synthesize_image(int(mid), w, h))
+        err = (
+            float(np.abs(arr.astype(np.float64) - ref).mean())
+            if arr.shape == ref.shape
+            else float("inf")
+        )
+        tol = jpeg_tol if kind == "image/jpeg" else 0.0
+        md5 = hashlib.md5(arr.tobytes()).hexdigest()
+        return [(mid, kind, arr.shape[1], arr.shape[0], md5, err <= tol)]
 
-    return media.mapInPandas(batches, schema=DECODE_AUDIT_SCHEMA)
+    return _map_payloads(media, DECODE_AUDIT_SCHEMA, rows)
 
 
 def media_decode_sql() -> str:
@@ -895,28 +857,14 @@ def attach_pattern_images(docs: DataFrame) -> DataFrame:
 def image_dhash(media: DataFrame) -> DataFrame:
     """(media_id, dhash, band0..band3): 64-bit perceptual difference hash
     of every decodable image payload, with the four 16-bit band keys the
-    near-dup join buckets on.  Arrow mapInPandas, 1:1 over decodable rows
-    (dead-letter convention); the only Python stage in the pipeline —
+    near-dup join buckets on.  The only Python stage in the pipeline —
     everything downstream is JVM column ops."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "dhash", "band0", "band1", "band2", "band3",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    arr = codecs.decode_image(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                h = codecs.dhash_hex(arr)
-                rows["media_id"].append(mid)
-                rows["dhash"].append(h)
-                for i in range(4):
-                    rows[f"band{i}"].append(h[4 * i : 4 * i + 4])
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        h = codecs.dhash_hex(codecs.decode_image(b))
+        return [(mid, h, h[0:4], h[4:8], h[8:12], h[12:16])]
 
-    return media.mapInPandas(batches, schema=DHASH_SCHEMA)
+    return _map_payloads(media, DHASH_SCHEMA, rows)
 
 
 def _image_banding(max_hamming: int) -> dict:
@@ -1053,26 +1001,13 @@ def attach_fp_tones(docs: DataFrame) -> DataFrame:
 
 def audio_fingerprints(media: DataFrame) -> DataFrame:
     """(media_id, w0..w7): per-window zero-crossing fingerprint of every
-    decodable audio payload (Arrow mapInPandas, 1:1 over decodable rows,
-    dead-letter convention)."""
+    decodable audio payload (1:1 over decodable rows)."""
     n_windows = codecs.FP_WINDOWS
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": []}
-            for i in range(n_windows):
-                rows[f"w{i}"] = []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    fp = codecs.audio_zc_fingerprint(b, n_windows)
-                except codecs.UnsupportedMediaError:
-                    continue
-                rows["media_id"].append(mid)
-                for i in range(n_windows):
-                    rows[f"w{i}"].append(fp[i])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
+    return _map_payloads(
+        media,
+        AUDIO_FP_SCHEMA,
+        lambda mid, b: [(mid, *codecs.audio_zc_fingerprint(b, n_windows))],
+    )
 
 
 def _audio_banding(max_dev: int) -> dict:
@@ -1214,33 +1149,17 @@ def attach_pattern_videos(docs: DataFrame) -> DataFrame:
 def video_fingerprints(media: DataFrame) -> DataFrame:
     """(media_id, f0..f{P-1}): dHash of every VIDEO_SAMPLE_STEP-th frame,
     random-accessed from the RAWV container (skipped frames never
-    materialize — the sampling-beats-decoding property).  Arrow
-    mapInPandas, 1:1 over decodable rows, dead-letter convention."""
+    materialize — the sampling-beats-decoding property).  1:1 over
+    decodable rows; a clip too short for P positions is a dead letter."""
     n_pos, step = codecs.VIDEO_POSITIONS, codecs.VIDEO_SAMPLE_STEP
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"media_id": []}
-            for p in range(n_pos):
-                rows[f"f{p}"] = []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    _w, _h, n = codecs.decode_rawv(b)
-                    hs = [
-                        codecs.dhash_hex(codecs.rawv_frame(b, p * step))
-                        for p in range(n_pos)
-                        if p * step < n
-                    ]
-                except codecs.UnsupportedMediaError:
-                    continue
-                if len(hs) != n_pos:  # too-short clip: dead-letter
-                    continue
-                rows["media_id"].append(mid)
-                for p in range(n_pos):
-                    rows[f"f{p}"].append(hs[p])
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        if codecs.decode_rawv(b)[2] <= (n_pos - 1) * step:
+            return []
+        hs = [codecs.dhash_hex(codecs.rawv_frame(b, p * step)) for p in range(n_pos)]
+        return [(mid, *hs)]
 
-    return media.mapInPandas(batches, schema=VIDEO_FP_SCHEMA)
+    return _map_payloads(media, VIDEO_FP_SCHEMA, rows)
 
 
 def _video_banding(max_hamming: int) -> dict:
@@ -1357,42 +1276,24 @@ def sample_video_frames(
     """REAL frame sampling: parse the RAWV container header, random-access
     every ``every_n``-th frame (never materializing the skipped ones — the
     property that makes sampling cheaper than decoding), re-encode each kept
-    frame as P6 PPM.  1:N Arrow batches; non-video rows dropped (dead-letter
-    pattern); compressed video stays gated at the ffmpeg seam inside
-    ``codecs.decode_rawv``.
+    frame as P6 PPM.  1:N; compressed video stays gated at the ffmpeg seam
+    inside ``codecs.decode_rawv``.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    _w, _h, n = codecs.decode_rawv(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                for k, fi in enumerate(range(0, n, every_n)):
-                    if k >= max_frames:
-                        break
-                    ids.append(mid)
-                    idxs.append(fi)
-                    frames.append(codecs.encode_ppm(codecs.rawv_frame(b, fi)))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "frame": frames,
-                    "n_bytes": [len(f) for f in frames],
-                }
-            )
+    def rows(mid, b):
+        n = codecs.decode_rawv(b)[2]
+        for _, fi in zip(range(max_frames), range(0, n, every_n)):
+            frame = codecs.encode_ppm(codecs.rawv_frame(b, fi))
+            yield mid, fi, frame, len(frame)
 
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _map_payloads(media, FRAME_SCHEMA, rows)
 
 
 def sample_frames(
     media: DataFrame, frame_bytes: int = 256, every_n: int = 4, max_frames: int = 8
 ) -> DataFrame:
-    """Arrow-batched 1:N frame sampling (mapInPandas, MORE rows out than in —
-    the explode-shaped batch contract a video pipeline needs).
+    """Arrow-batched 1:N frame sampling (MORE rows out than in — the
+    explode-shaped batch contract a video pipeline needs).
 
     Production body: ffmpeg keyframe extraction every ``every_n`` frames.
     The stand-in treats the payload as a sequence of ``frame_bytes`` chunks
@@ -1401,27 +1302,13 @@ def sample_frames(
     yield ZERO rows (an un-decodable video has no frames), keeping the
     every-frame ``n_bytes > 0`` invariant."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                n_chunks = (len(b) + frame_bytes - 1) // frame_bytes
-                for k, chunk_i in enumerate(range(0, n_chunks, every_n)):
-                    if k >= max_frames:
-                        break
-                    ids.append(mid)
-                    idxs.append(chunk_i)
-                    frames.append(bytes(b[chunk_i * frame_bytes:(chunk_i + 1) * frame_bytes]))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "frame": frames,
-                    "n_bytes": [len(f) for f in frames],
-                }
-            )
+    def rows(mid, b):
+        n_chunks = (len(b) + frame_bytes - 1) // frame_bytes
+        for _, ci in zip(range(max_frames), range(0, n_chunks, every_n)):
+            frame = bytes(b[ci * frame_bytes : (ci + 1) * frame_bytes])
+            yield mid, ci, frame, len(frame)
 
-    return media.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _map_payloads(media, FRAME_SCHEMA, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1470,32 +1357,22 @@ def attach_mjpeg_videos(docs: DataFrame) -> DataFrame:
 def video_container_meta(media: DataFrame) -> DataFrame:
     """Per-clip ISO-BMFF metadata via the pure 14496-12 parse (NO frame
     decode — the property that makes a 100-TB corpus survey cheap: the
-    sample TABLE is a few KB regardless of mdat size).  Unparseable
-    payloads are dropped (dead-letter convention)."""
+    sample TABLE is a few KB regardless of mdat size).  1:1 over
+    parseable payloads."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "brand", "codec", "width", "height",
-                "n_samples", "duration_ms",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    info = codecs.parse_mp4(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                rows["media_id"].append(mid)
-                rows["brand"].append(info["brand"])
-                rows["codec"].append(info["codec"])
-                rows["width"].append(info["width"])
-                rows["height"].append(info["height"])
-                rows["n_samples"].append(info["n_samples"])
-                rows["duration_ms"].append(
-                    info["duration"] * 1000 // info["timescale"]
-                )
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        i = codecs.parse_mp4(b)
+        return [(
+            mid,
+            i["brand"],
+            i["codec"],
+            i["width"],
+            i["height"],
+            i["n_samples"],
+            i["duration"] * 1000 // i["timescale"],
+        )]
 
-    return media.mapInPandas(batches, schema=MP4_META_SCHEMA)
+    return _map_payloads(media, MP4_META_SCHEMA, rows)
 
 
 def decode_mp4_frames_audit(
@@ -1507,41 +1384,25 @@ def decode_mp4_frames_audit(
     emit per-frame digests the oracle pins via the 256-class precompute
     (frame f of clip d is the quantized gradient of class
     ((d+f)*37) % 256).  err_ok bounds reconstruction error against the
-    closed-form gradient.  1:N Arrow batches; undecodable rows dropped."""
-    w, h, tol = DECODE_WIDTH, DECODE_HEIGHT, jpeg_tol
-    step = codecs.MP4_SAMPLE_STEP
+    closed-form gradient.  1:N; non-MJPEG tracks yield nothing, and a clip
+    whose k-th sampled frame is corrupt keeps the frames before k."""
+    w, h, step = DECODE_WIDTH, DECODE_HEIGHT, codecs.MP4_SAMPLE_STEP
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "frame_idx", "pixel_md5", "err_ok",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    info = codecs.parse_mp4(b)
-                    if info["codec"] != "jpeg":
-                        continue
-                    for fi in range(0, info["n_samples"], step):
-                        arr = codecs.mp4_frame(b, fi)
-                        ref = codecs.decode_ppm(
-                            codecs.synthesize_image(int(mid) + fi, w, h)
-                        )
-                        err = (
-                            float(np.abs(arr.astype(np.float64) - ref).mean())
-                            if arr.shape == ref.shape
-                            else float("inf")
-                        )
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(fi)
-                        rows["pixel_md5"].append(
-                            hashlib.md5(arr.tobytes()).hexdigest()
-                        )
-                        rows["err_ok"].append(err <= tol)
-                except codecs.UnsupportedMediaError:
-                    continue
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        info = codecs.parse_mp4(b)
+        if info["codec"] != "jpeg":
+            return
+        for fi in range(0, info["n_samples"], step):
+            arr = codecs.mp4_frame(b, fi)
+            ref = codecs.decode_ppm(codecs.synthesize_image(int(mid) + fi, w, h))
+            err = (
+                float(np.abs(arr.astype(np.float64) - ref).mean())
+                if arr.shape == ref.shape
+                else float("inf")
+            )
+            yield mid, fi, hashlib.md5(arr.tobytes()).hexdigest(), err <= jpeg_tol
 
-    return media.mapInPandas(batches, schema=MP4_FRAME_AUDIT_SCHEMA)
+    return _map_payloads(media, MP4_FRAME_AUDIT_SCHEMA, rows)
 
 
 def video_mp4_meta_sql() -> str:
@@ -1641,39 +1502,25 @@ def decode_audio_audit(
     byte-for-byte) plus a closed-form signal check (mean abs err vs the
     pure synthesis sine under the codec's measured ceiling: the decoder
     recovers the SIGNAL, not merely something self-consistent).
-    Undecodable rows dropped."""
+    1:1 over decodable rows."""
     tols = {"mulaw": g711_tol, "alaw": g711_tol, "adpcm": adpcm_tol}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "codec", "rate", "n_samples", "sample_md5",
-                "err_ok",
-            )}
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    x, rate = codecs.decode_wav(b)
-                except codecs.UnsupportedMediaError:
-                    continue
-                t = np.arange(len(x), dtype=np.float64) / rate
-                ref = 0.5 * np.sin(
-                    2 * np.pi * codecs.fp_tone_freq(int(mid)) * t
-                )
-                pcm = (x * 32768.0).astype("<i2")
-                codec = codecs.AUDIO_CODEC_CYCLE[int(mid) % 3]
-                rows["media_id"].append(mid)
-                rows["codec"].append(codec)
-                rows["rate"].append(rate)
-                rows["n_samples"].append(len(x))
-                rows["sample_md5"].append(
-                    hashlib.md5(pcm.tobytes()).hexdigest()
-                )
-                rows["err_ok"].append(
-                    float(np.abs(x - ref).mean()) <= tols[codec]
-                )
-            yield pd.DataFrame(rows)
+    def rows(mid, b):
+        x, rate = codecs.decode_wav(b)
+        t = np.arange(len(x), dtype=np.float64) / rate
+        ref = 0.5 * np.sin(2 * np.pi * codecs.fp_tone_freq(int(mid)) * t)
+        pcm = (x * 32768.0).astype("<i2")
+        codec = codecs.AUDIO_CODEC_CYCLE[int(mid) % 3]
+        return [(
+            mid,
+            codec,
+            rate,
+            len(x),
+            hashlib.md5(pcm.tobytes()).hexdigest(),
+            float(np.abs(x - ref).mean()) <= tols[codec],
+        )]
 
-    return media.mapInPandas(batches, schema=AUDIO_DECODE_AUDIT_SCHEMA)
+    return _map_payloads(media, AUDIO_DECODE_AUDIT_SCHEMA, rows)
 
 
 def media_decode_audio_sql() -> str:

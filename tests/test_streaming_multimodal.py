@@ -162,9 +162,9 @@ def test_compressed_tail_stays_gated():
 
     # truncated payloads of both formats
     with pytest.raises(UnsupportedMediaError):
-        multimodal.decode_image(b"\x89PNG\r\n\x1a\n....")
+        codecs.decode_image(b"\x89PNG\r\n\x1a\n....")
     with pytest.raises(UnsupportedMediaError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0....")
+        codecs.decode_image(b"\xff\xd8\xff\xe0....")
     # progressive JPEG: flip our encoder's SOF0 marker to SOF2
     import numpy as np
 
@@ -245,7 +245,7 @@ def test_real_image_resize_stage(spark):
     for r in resized:
         got = codecs.decode_ppm(r.content)
         expected = codecs.resize_nearest(
-            codecs.decode_ppm(multimodal.synthesize_image(r.media_id)), 8, 8
+            codecs.decode_ppm(codecs.synthesize_image(r.media_id)), 8, 8
         )
         assert got.shape == (8, 8, 3) and (got == expected).all()
 
@@ -528,24 +528,53 @@ def test_rawv_frame_index_error_not_classified_corrupt():
 
 def test_corrupt_payloads_are_dead_lettered(spark):
     """A truncated payload of a SUPPORTED format must be dropped like an
-    unsupported one — one corrupt file must never fail the Spark stage."""
+    unsupported one — one corrupt file must never fail the Spark stage.
+    Every decode stage sees the same mixed table; a clip whose k-th
+    sampled frame is corrupt keeps the frames sampled before k."""
     from procurement_system_bigdata_spark.operators import codecs
 
+    step = codecs.MP4_SAMPLE_STEP
+    # MJPEG clip 9 has 8 frames (sampled 0, 2, 4, 6); overwrite sampled
+    # frame 4 in place so the container still parses
+    partial = bytearray(codecs.synthesize_mjpeg_video(9))
+    info = codecs.parse_mp4(bytes(partial))
+    off, sz = info["sample_offsets"][2 * step], info["sample_sizes"][2 * step]
+    partial[off : off + sz] = b"\x00" * sz
+    mp4 = codecs.synthesize_mjpeg_video(8)
     rows = [
         (1, codecs.synthesize_image(1), "image/x-portable-pixmap"),
         (2, b"P6\n9 9\n255\nxx", "image/x-portable-pixmap"),  # truncated
         (3, codecs.synthesize_wav(3), "audio/wav"),
         (4, b"RIFF1234WAVExxxx", "audio/wav"),  # truncated
-        (5, codecs.synthesize_video(5, 8, 6, 4), "video/x-rawv"),
+        (5, codecs.synthesize_video(5, 8, 6, 4), "video/x-rawv"),  # too short to fingerprint
         (6, b"RAWV\x01\x00", "video/x-rawv"),  # truncated header
+        (7, codecs.synthesize_mjpeg_video(7), "video/mp4"),
+        (8, mp4[: len(mp4) // 2], "video/mp4"),  # truncated
+        (9, bytes(partial), "video/mp4"),
+        (10, codecs.synthesize_pattern_video(10), "video/x-rawv"),
     ]
     media = spark.createDataFrame(
         [(mid, c, t, len(c)) for mid, c, t in rows],
         "media_id long, content binary, media_type string, n_bytes long",
     )
-    assert {r.media_id for r in multimodal.resize_images(media).collect()} == {1}
-    assert {r.media_id for r in multimodal.audio_features(media).collect()} == {3}
-    assert {r.media_id for r in multimodal.sample_video_frames(media).collect()} == {5}
+
+    def kept(df):
+        return {r.media_id for r in df.collect()}
+
+    assert kept(multimodal.resize_images(media)) == {1}
+    assert kept(multimodal.image_dhash(media)) == {1}
+    assert kept(multimodal.decode_images_audit(media)) == {1}
+    assert kept(multimodal.audio_features(media)) == {3}
+    assert kept(multimodal.audio_features_audit(media)) == {3}
+    assert kept(multimodal.audio_fingerprints(media)) == {3}
+    assert kept(multimodal.sample_video_frames(media)) == {5, 10}
+    assert kept(multimodal.video_fingerprints(media)) == {10}
+    assert kept(multimodal.video_container_meta(media)) == {7, 9}
+    frames = multimodal.decode_mp4_frames_audit(media).collect()
+    assert sorted((r.media_id, r.frame_idx) for r in frames) == [
+        (7, f) for f in range(0, codecs.mp4_frame_count(7), step)
+    ] + [(9, 0), (9, step)]
+    assert all(r.err_ok for r in frames)
 
 
 def test_streaming_dedup_ingest_across_batches(spark, tmp_path):
